@@ -149,9 +149,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   *
   * STAGING DISCLOSURE (r19 verdict item 4): the record carries
   * `staging_sec` / `staging_rebuilds` / `staged_fresh` — the seconds
-  * spent and the number of build-once staging rebuilds
-  * (Staging.stageMultiFile, CleanStore tables, dedup cluster labels,
-  * Tables fixture exports) that ran INSIDE this take's timed region.
+  * spent and the number of build-once staging rebuilds (every
+  * ManifestStore snapshot publish, plus the in-place CleanStore tables)
+  * that ran INSIDE this take's timed region.
   * Those substrates re-lay inputs once per source stamp and serve the
   * copy forever after, so a take with `staged_fresh:true` paid amortized
   * layout cost in its cold numbers that later takes will not pay, and a
@@ -413,14 +413,8 @@ object Bench {
     val sparkCanary = canarySpark(spark)
     System.err.println(
       f"[bench] host canary: cpu ${cpuCanary}%.3fs spark ${sparkCanary}%.3fs")
-    // bench-only A/B twins run ONLY when named explicitly — a no-args
-    // full-registry take must match the verify registry query-for-query
-    val benchOnlyKeys = graft.operators.Dedup.benchOnly.keySet
     val selected = registry.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        if (args.isEmpty) !benchOnlyKeys.contains(name)
-        else args.contains(name)
-      }
+      .filter { case (name, _) => args.isEmpty || args.contains(name) }
     // MID-RUN CONTENTION GATE (r17 verdict item 1): the start-of-take
     // load gate cannot see contention that ARRIVES during the take —
     // r16's and r17's driver records both passed the start gate and were
@@ -538,11 +532,10 @@ object Bench {
       QRun(cold.map(_._1), warm, gcSec, foreignCores())
     }
     // STAGING TRANSPARENCY (r19 verdict item 4): the build-once staging
-    // substrates (Staging.stageMultiFile, the CleanStore tables, the
-    // dedup cluster labels, the Tables fixture exports) re-lay inputs
-    // ONCE per source stamp; every later take — including a judged
-    // "cold" — serves the pre-staged copy and never pays the layout
-    // cost. The ledger below is drained here (warmup staging is not the
+    // substrates (every ManifestStore snapshot publish, plus the
+    // in-place CleanStore tables) re-lay inputs ONCE per source stamp;
+    // every later take — including a judged "cold" — serves the
+    // pre-staged copy and never pays the layout cost. The ledger below is drained here (warmup staging is not the
     // take's) and again after the loop, so the record discloses exactly
     // how many serving copies this take (re)built and how long that
     // took: staging_sec > 0 means the cold numbers INCLUDE amortized

@@ -38,8 +38,7 @@ object SparkEntry {
     * not the hash protocol.
     */
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ Analytics.benchOverrides ++ EventStreams.benchOverrides ++
-      Dedup.benchOnly
+    queries ++ Analytics.benchOverrides ++ EventStreams.benchOverrides
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
     * same parquet tables. Omitted for approximate (non-SQL-expressible)

@@ -47,7 +47,7 @@ case class RhpBuckets(
 }
 
 object RhpBuckets {
-  /** Stamped into persisted-index `_graft_spec` payloads: the plane
+  /** Stamped into persisted-index specs: the plane
     * FORMULA is part of an index artifact's identity (the expression tree
     * `rhp_buckets(v, 1, p, d, s)` prints identically across formula
     * changes, so the canonicalized plan alone would serve stale cells

@@ -153,8 +153,8 @@ object CleanStore {
     val dir = stagePath(sfDir, name)
     // the served frame's file listing is captured INSIDE the lock: ensure
     // never hands out a half-written table (a scan already in flight when
-    // a LATER rebuild hits is the in-place-overwrite residual documented
-    // on Staging)
+    // a LATER rebuild hits is this store's in-place-overwrite residual,
+    // ARTIFACTS.md rule 5)
     graft.sources.Staging.withExclusiveLock(new java.io.File(dir).getParentFile) {
       val marker = new java.io.File(s"$dir/_SUCCESS")
       val source = new java.io.File(Tables.path(sfDir, sourceTable))

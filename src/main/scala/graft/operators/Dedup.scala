@@ -830,41 +830,31 @@ object Dedup {
     * artifact: at 100 TB nobody re-runs shingling + pair generation +
     * label propagation to emit a manifest — the clustering runs once per
     * corpus version and every downstream consumer (dd9's manifest, audit
-    * joins, incremental re-dedup) reads the parquet back. Source-stamp
-    * staleness like the other artifacts; the check-and-build is
-    * cross-process locked (a bench run next to the test suite must not
-    * interleave with a half-written label table).
+    * joins, incremental re-dedup) reads the parquet back. Published as a
+    * [[graft.sources.ManifestStore]] snapshot keyed on build logic +
+    * source stamp.
     */
   def clusterLabels(
       spark: SparkSession, sfDir: String, n: Int = 3,
       threshold: Double = 0.2, maxDf: Int = 50,
       upTo: Long = Long.MaxValue): DataFrame = {
-    val path = clusterLabelsPath(sfDir, n, threshold, maxDf, upTo)
-    val source = new java.io.File(Tables.path(sfDir, "documents"))
-    graft.sources.Staging.withExclusiveLock(new java.io.File(path).getParentFile) {
-      val marker = new java.io.File(s"$path/_SUCCESS")
-      val specFile = new java.io.File(s"$path/_graft_spec")
-      // `upTo` bounds the clustered corpus (doc_id < upTo) — the
-      // "yesterday's corpus" artifact dd11 deduplicates new batches
-      // against; the DF cap statistics are the bounded corpus's own.
-      // The LAZY pair pipeline's plan fingerprints the build logic
-      // (tokenizer, shingling, DF cap, jaccard filter): a code change
-      // invalidates the artifact even when the corpus file did not move.
-      // The eager propagation downstream of it is not in the spec —
-      // a labeling-algorithm change must also bump this tag:
-      val pairs = ngramJaccardPairs(
-        Tables.documentsRebalanced(spark, sfDir).filter(col("doc_id") < upTo),
-        n, threshold, maxDf)
-      val spec = "min-label-cc-v1\n" + graft.sources.Staging.planSpec(pairs) +
-        "\n" + graft.sources.Staging.sourceStamp(Seq(source))
-      val fresh = marker.exists() && specFile.exists() &&
-        new String(java.nio.file.Files.readAllBytes(specFile.toPath)) == spec
-      if (!fresh) graft.sources.Staging.timedRebuild {
-        dupClusters(pairs).write.mode("overwrite").parquet(path)
-        java.nio.file.Files.write(specFile.toPath, spec.getBytes)
-      }
-      spark.read.parquet(path)
-    }
+    // `upTo` bounds the clustered corpus (doc_id < upTo) — the
+    // "yesterday's corpus" artifact dd11 deduplicates new batches
+    // against; the DF cap statistics are the bounded corpus's own.
+    // The LAZY pair pipeline's plan fingerprints the build logic
+    // (tokenizer, shingling, DF cap, jaccard filter): a code change
+    // invalidates the artifact even when the corpus file did not move.
+    // The eager propagation downstream of it is not in the spec —
+    // a labeling-algorithm change must also bump this tag:
+    val pairs = ngramJaccardPairs(
+      Tables.documentsRebalanced(spark, sfDir).filter(col("doc_id") < upTo),
+      n, threshold, maxDf)
+    val spec = "min-label-cc-v1\n" + graft.sources.Staging.planSpec(pairs) +
+      "\n" + graft.sources.Staging.sourceStamp(
+        Seq(new java.io.File(Tables.path(sfDir, "documents"))))
+    graft.sources.ManifestStore.serve(spark,
+      new java.io.File(clusterLabelsPath(sfDir, n, threshold, maxDf, upTo)), spec)(
+      dupClusters(pairs).write.parquet(_))
   }
 
   /** dd9 — the step every training-data pipeline runs after clustering:
@@ -946,20 +936,8 @@ object Dedup {
     */
   def incrementalDedupEdges(
       docs: DataFrame, oldLabels: DataFrame, newFrom: Long,
-      n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50,
-      repartitionShingles: Boolean = false): DataFrame = {
-    // repartitionShingles = the r18/r19 exchange-reuse A/B candidate:
-    // pre-shuffling the exploded shingles on `s` lets the four
-    // consumers (DF cap, per-doc sizes, batch side, intersection join)
-    // reuse ONE exchange instead of re-tokenizing per subtree. Measured
-    // a WASH at sf0.1 (r18_NOTES) and at sf1 (bench/r19_dd11_repart_sf1
-    // .json) — the shingle shuffle costs what the repeated tokenization
-    // saves — so the default stays false; the knob remains because the
-    // trade flips when tokenize cost ≫ shuffle cost (longer docs,
-    // heavier normalization), a corpus property a deployment should
-    // measure with exactly this A/B.
-    val ex0 = explodedShingles(docs, n)
-    val ex = if (repartitionShingles) ex0.repartition(col("s")) else ex0
+      n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50): DataFrame = {
+    val ex = explodedShingles(docs, n)
     // DF cap over the POST-INGEST corpus (today's statistics govern
     // today's candidates; yesterday's clustering used yesterday's —
     // that is what the artifact froze)
@@ -1545,27 +1523,6 @@ object Dedup {
       val docs = Tables.documentsRebalanced(s, d)
       val newFrom = arrivalSplit(docs)
       incrementalDedupLabels(docs, clusterLabels(s, d, upTo = newFrom), newFrom)
-    }))
-
-  /** BENCH-ONLY A/B twin (r19 verdict item 6; not in `queries`, so the
-    * oracle-coverage contract and Verify are untouched): dd11 with the
-    * exchange-reuse candidate engaged — same output, different plan.
-    * Kept registered so the sf1 adjudication (bench/r19_dd11_repart_sf1
-    * .json) is reproducible; it costs nothing unless named in a Bench
-    * arg list.
-    */
-  val benchOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd11y_repart" -> ((s: SparkSession, d: String) => {
-      val docs = Tables.documentsRebalanced(s, d)
-      val newFrom = arrivalSplit(docs)
-      val edges = incrementalDedupEdges(
-        docs, clusterLabels(s, d, upTo = newFrom), newFrom,
-        repartitionShingles = true)
-      val mini = dupClusters(edges).select(col("doc_id"), col("rep_id").as("r"))
-      docs.filter(col("doc_id") >= newFrom).select(col("doc_id"))
-        .join(mini, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("r"), col("doc_id")).as("rep_id"))
-        .orderBy(col("doc_id"))
     }))
 
   /** DuckDB token-array expression over `text` — same tokenizer spec as

@@ -683,7 +683,7 @@ object Similarity {
 
   /** Canonical location of the LEARNED IVF artifact: trained centroids +
     * the corpus index partitioned by learned cell. Training parameters
-    * are part of the path; a `_graft_spec` tag records the algorithm
+    * are part of the path; a spec tag records the algorithm
     * version so a trainer change invalidates the artifact.
     */
   def learnedIvfPath(

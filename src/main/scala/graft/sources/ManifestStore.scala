@@ -35,9 +35,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    by ATOMIC_MOVE; killed after the swap but before GC leaves extra
   *    snapshots the next publish sweeps.
   *
-  * Spec semantics match the other stagings: `spec` is the caller's
-  * build-logic fingerprint + source stamp; a pointer whose spec matches
-  * is served as-is, anything else publishes a new snapshot. Snapshot ids
+  * Every build-once artifact except CleanStore's in-place clean tables
+  * publishes here. `spec` is the caller's build-logic fingerprint +
+  * source stamp; a pointer whose spec matches is served as-is, anything
+  * else publishes a new snapshot. Snapshot ids
   * are maxExisting+1 (no clocks — deterministic and monotonic under the
   * lock).
   */
@@ -92,7 +93,8 @@ object ManifestStore {
     * centroids/cells, codebooks/enc). `write(path)` must materialize the
     * FULL snapshot at `path` (it runs only on publish). The returned
     * directory is immutable — concurrent publishes cannot disturb a
-    * reader pinned to it (GC keeps {current, previous}).
+    * reader pinned to it (GC keeps {current, previous}). A publish is
+    * timed into the [[Staging.timedRebuild]] ledger.
     */
   def ensureSnapshot(root: File, spec: String,
       graceMs: Long = 0L)(write: String => Unit): File = {
@@ -105,7 +107,7 @@ object ManifestStore {
         Staging.withExclusiveLock(root) {
           currentPointer(root) match {
             case Some((id, s)) if s == spec => snapDir(root, id) // lost race, winner built
-            case stale =>
+            case stale => Staging.timedRebuild {
               // the new id is claimed from the PRE-sweep state (max of
               // everything on disk or pointed), so a generation number is
               // NEVER reused even when a lost pointer forces a total
@@ -151,6 +153,7 @@ object ManifestStore {
                 }
               }
               dest
+            }
           }
         }
     }

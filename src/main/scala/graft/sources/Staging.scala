@@ -5,55 +5,50 @@ import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
 import java.util.concurrent.ConcurrentHashMap
 
-/** Cross-process safety for the repo-local staging areas (the clean
-  * tables, the IVF cell index, the dedup cluster labels). Two JVMs
-  * sharing `target/` — the test suite next to a bench run — could
-  * otherwise interleave a staleness check with another process's
-  * in-flight write and serve a half-written table.
+/** Shared staging mechanics: the cross-process lock, the rebuild
+  * ledger, and the spec/stamp helpers every build-once artifact keys on.
+  * Artifacts publish through [[ManifestStore.ensureSnapshot]] (immutable
+  * snapshots behind an atomically swapped pointer); the in-place clean
+  * tables of [[graft.operators.CleanStore]] are the one exception.
   *
-  * The guard is an OS advisory file lock around the whole
-  * check-freshness-then-maybe-write critical section, DOUBLE-CHECKED: the
-  * winner builds, and the loser re-runs its staleness check under the
-  * lock, sees the fresh marker, and skips its own write. Markers
-  * (`_SUCCESS` + spec files) are written only after the data, and the
-  * served DataFrame's file listing is captured while still holding the
-  * lock — so no reader is ever handed a half-written table. What the
-  * lock does NOT cover (inherent to in-place overwrite without a
-  * transactional table format): a reader's IN-FLIGHT scan concurrent
-  * with a later rebuild can hit deleted files — the 100 TB posture for
-  * that is a pointer-swap manifest / table format, not a lock.
-  *
-  * `FileChannel.lock` is process-scoped, so a JVM-wide monitor per
-  * canonical path serializes same-process callers first (overlapping
-  * lock requests from one JVM would otherwise throw
+  * The lock is an OS advisory file lock, DOUBLE-CHECKED by its callers:
+  * the winner builds, and the loser re-runs its staleness check under the
+  * lock and skips its own write. `FileChannel.lock` is process-scoped, so
+  * a JVM-wide monitor per canonical path serializes same-process callers
+  * first (overlapping lock requests from one JVM would otherwise throw
   * OverlappingFileLockException). Advisory locks are a LOCAL-filesystem
-  * mechanism — the right local twin of what a 1000-executor deployment
-  * gets from a transactional table format or a pointer-swap manifest;
-  * staging writes here all run on the driver-side build path, never on
-  * executors.
+  * mechanism — the local twin of what a 1000-executor deployment gets
+  * from a transactional table format; staging writes all run on the
+  * driver-side build path, never on executors.
   */
 object Staging {
 
   private val monitors = new ConcurrentHashMap[String, Object]()
 
-  // Staged-artifact REBUILD ledger (r19 verdict item 4 — staging
-  // transparency): every build-once substrate (stageMultiFile, the
-  // CleanStore tables, the dedup cluster labels, the Tables fixture
-  // exports) re-lays data ONCE per source stamp and serves the copy on
-  // every later run — so a "cold" bench take that happens to follow a
-  // staging run never pays the layout cost, and the judged record could
-  // not tell a genuinely-cold take from an amortized one. Builders wrap
-  // their rebuild blocks in [[timedRebuild]]; Bench drains the ledger
-  // around its timed region and stamps `staging_sec`/`staging_rebuilds`
-  // into the record, so any take that (re)built serving copies says so.
+  // Staged-artifact REBUILD ledger: every build-once artifact re-lays
+  // data ONCE per spec and serves the copy on every later run, so a
+  // "cold" bench take that follows a staging run never pays the layout
+  // cost. The publish branch of ManifestStore.ensureSnapshot (and
+  // CleanStore's in-place refresh) runs inside [[timedRebuild]]; Bench
+  // drains the ledger around its timed region and stamps
+  // `staging_sec`/`staging_rebuilds` into the record. Only the OUTERMOST
+  // block on a thread counts: a publish whose write body publishes its
+  // own inputs (the compacted index over the learned base index) is one
+  // rebuild, timed once.
   private val rebuildNanosAcc = new java.util.concurrent.atomic.AtomicLong(0L)
   private val rebuildCountAcc = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val rebuildDepth = ThreadLocal.withInitial[Integer](() => 0)
 
   def timedRebuild[T](body: => T): T = {
+    val depth: Int = rebuildDepth.get
+    rebuildDepth.set(depth + 1)
     val t0 = System.nanoTime()
     try body finally {
-      rebuildNanosAcc.addAndGet(System.nanoTime() - t0)
-      rebuildCountAcc.incrementAndGet(); ()
+      rebuildDepth.set(depth)
+      if (depth == 0) {
+        rebuildNanosAcc.addAndGet(System.nanoTime() - t0)
+        rebuildCountAcc.incrementAndGet(); ()
+      }
     }
   }
 
@@ -73,8 +68,8 @@ object Staging {
     * the tokenizer inside a shingle generator, a new cleaning rule)
     * alters at least one of these, so an artifact staged under old logic
     * is invalidated instead of silently served — the CleanStore staging,
-    * the IVF cell index and the dedup cluster labels all record this
-    * next to their data. `Expression.sql` is stable across sessions (no
+    * the IVF cell index and the dedup cluster labels all carry it in
+    * their spec. `Expression.sql` is stable across sessions (no
     * exprIds), unlike the full plan string; computing the spec analyzes
     * the plan but runs no job. (A logic change strictly downstream of
     * the fingerprinted frame — e.g. inside an eager iterative consumer —
@@ -93,8 +88,8 @@ object Staging {
   }
 
   /** Freshness token for an artifact's SOURCE files: (path, mtime,
-    * length) per file. Stored INSIDE the artifact's `_graft_spec` (or a
-    * sibling stamp file) and string-compared on the next serve — unlike
+    * length) per file. Carried in the artifact's spec and
+    * string-compared on the next serve — unlike
     * the `marker.lastModified() >= source.lastModified()` scheme it
     * replaces, a source rewritten in the same filesystem-timestamp second
     * as the artifact build (coarse 1 s mtime granularity) still changes
@@ -125,38 +120,29 @@ object Staging {
       .filter(f => f.isFile && !f.getName.startsWith("_") &&
         !f.getName.startsWith("."))
 
-  /** Restage one table of `sfDir` as a MULTI-FILE directory under a fake
-    * scale dir (target/<area>/<sfName>/<table>.parquet as a DIRECTORY —
-    * both the batch and streaming readers accept it): the streaming file
-    * source's admission control (maxFilesPerTrigger) can then split the
-    * backlog into real micro-batches, which a single-file source (one
-    * all-or-nothing batch) cannot give the restart drill or the rate
-    * drill. Stamped on the source + file count, cross-process locked.
-    * Returns the fake sfDir path (shared by multiple tables staged under
-    * the same area).
+  /** Restage one table of `sfDir` as a MULTI-FILE directory (a
+    * `<table>.parquet` DIRECTORY — both the batch and streaming readers
+    * accept it) inside a snapshot of `target/<area>/<sfName>/<table>`:
+    * the streaming file source's admission control (maxFilesPerTrigger)
+    * can then split the backlog into real micro-batches, which a
+    * single-file source (one all-or-nothing batch) cannot give the
+    * restart drill or the rate drill. Keyed on the source's data-file
+    * listing + file count. Returns a fake sfDir (named like the real one)
+    * holding the staged table.
     */
   def stageMultiFile(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
       table: String, files: Int, area: String): String = {
     val sfName = new File(sfDir).getName
-    val fake = new File(s"${sys.props("user.dir")}/target/$area/$sfName")
-    val dst = new File(fake, s"$table.parquet")
     val src = new File(Tables.path(sfDir, table))
-    val stampFile = new File(fake, s"_graft_source_$table")
-    // directory sources stamp their file LISTING, not the directory
-    // entry's (mtime, length) — see sourceStampDeep (r19 advisor)
-    val stamp = sourceStampDeep(src) + s" files=$files"
-    withExclusiveLock(fake) {
-      val fresh = stampFile.exists() && dst.exists() &&
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) == stamp
-      if (!fresh) timedRebuild {
-        spark.read.parquet(src.getAbsolutePath)
-          .repartition(files)
-          .write.mode("overwrite").parquet(dst.getAbsolutePath)
-        java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
-      }
+    val spec = sourceStampDeep(src) + s" files=$files"
+    val snap = ManifestStore.ensureSnapshot(
+        new File(s"${sys.props("user.dir")}/target/$area/$sfName/$table"), spec) { p =>
+      spark.read.parquet(src.getAbsolutePath)
+        .repartition(files)
+        .write.parquet(Tables.path(s"$p/$sfName", table))
     }
-    fake.getAbsolutePath
+    new File(snap, sfName).getAbsolutePath
   }
 
   /** Recursive delete, null-race safe (listFiles is null when another

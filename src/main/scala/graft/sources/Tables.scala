@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.io.File
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,7 +54,7 @@ object Tables {
     * fall back to its micro-scale floor on a typo'd table name.
     */
   def tableBytes(sfDir: String, name: String): Long = {
-    val f = new java.io.File(path(sfDir, name))
+    val f = new File(path(sfDir, name))
     val bytes =
       if (f.isFile) f.length
       else Staging.dataFiles(f).map(_.length).sum
@@ -119,19 +123,11 @@ object Tables {
     rebalanced(spark, documents(spark, sfDir), s"$sfDir/documents",
       RebalanceTargetBytes / 4)
 
-  /** For CPU-heavy NARROW plans over embeddings (e.g. the dd6 all-pairs
-    * broadcast-nested-loop, which has no shuffle anywhere to restore
-    * parallelism after a single-file scan).
-    */
-  def embeddingsRebalanced(spark: SparkSession, sfDir: String): DataFrame =
-    rebalanced(spark, embeddings(spark, sfDir), s"$sfDir/embeddings",
-      RebalanceTargetBytes)
-
   // NOTE: no lineitemRebalanced — measured at sf0.1, q01's cost is the
   // serial decode of the single-row-group testdata file, and a rebalancing
   // exchange after it only adds shuffle time (1.7 s → 1.9 s warm). The
-  // documents/embeddings rebalances above earn their exchange because the
-  // downstream per-row CPU (shingling, vector math) dwarfs the decode.
+  // documents rebalances above earn their exchange because the
+  // downstream per-row CPU (shingling) dwarfs the decode.
 
   /** Multi-file SERVING copy of the lineitem fact — the layout-level fix
     * the in-plan rebalance above cannot be: the driver corpus ships
@@ -140,8 +136,8 @@ object Tables {
     * sizing — an in-plan `repartition` still decodes serially and only
     * adds a shuffle (the measurement in the NOTE above). Staging the
     * table ONCE per scale dir into `max(32, bytes/32MiB) ≤ 512` files
-    * (Staging.stageMultiFile: source-stamped, spec'd, cross-process
-    * locked — the RestartDrill substrate) parallelizes the DECODE and the
+    * (Staging.stageMultiFile: a source-stamped snapshot — the
+    * RestartDrill substrate) parallelizes the DECODE and the
     * map-side partial aggregation; at production layouts (many files/row
     * groups) the same call is a stamped no-op copy of what the lakehouse
     * already has. Adopted PER QUERY by measurement (r19 Profile A/B,
@@ -155,7 +151,7 @@ object Tables {
     readerCache
       .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
       .getOrElseUpdate(s"$sfDir/lineitem-multi", {
-        val src = new java.io.File(path(sfDir, "lineitem"))
+        val src = new File(path(sfDir, "lineitem"))
         // directory sources size from the summed data files, not the
         // ~4 KB directory entry (r19 advisor, medium — File.length on a
         // directory pinned `files` at the 32 floor and re-wrote a large
@@ -167,11 +163,10 @@ object Tables {
         // files, its decode already parallelizes — serve it directly,
         // no restage (r19 advisor: the staged copy existed to split ONE
         // single-row-group file, not to re-lay a lakehouse table)
-        if (src.isDirectory &&
-            graft.sources.Staging.dataFiles(src).length >= 32)
+        if (src.isDirectory && Staging.dataFiles(src).length >= 32)
           lineitem(spark, sfDir)
         else {
-          val staged = graft.sources.Staging.stageMultiFile(
+          val staged = Staging.stageMultiFile(
             spark, sfDir, "lineitem", files, "factstage")
           spark.read.parquet(path(staged, "lineitem"))
         }
@@ -189,9 +184,7 @@ object Tables {
     * optimum every 8-core record measured; cap = the session's cores so
     * fact-scale corpora still saturate the machine.
     */
-  private val RebalanceTargetBytes: Long =
-    sys.env.get("SPARK_GRAFT_REBALANCE_TARGET_KB").map(_.toLong * 1024)
-      .getOrElse(64L * 1024)
+  private val RebalanceTargetBytes: Long = 64L * 1024
 
   private def rebalanced(spark: SparkSession, df: DataFrame, key: String,
       targetBytes: Long): DataFrame = {
@@ -255,12 +248,6 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     apply(spark, sfDir, "events")
 
-  /** S3 — CSV dimension source (the reference's zones lookup is a CSV,
-    * assignment1.ipynb:239, app.py:102). The driver stages parquet only, so
-    * the projected nation dim is materialized to CSV once (idempotent,
-    * inside the repo's target dir) and read back with an EXPLICIT schema —
-    * inferSchema is nondeterministic under sampling and costs an extra scan.
-    */
   /** S8 — JSON-lines source with the production read contract: EXPLICIT
     * schema (inference is a second full scan and nondeterministic under
     * sampling) plus PERMISSIVE corrupt-record capture — a malformed line
@@ -275,33 +262,35 @@ object Tables {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** The nation dim as a JSON-lines export (same idempotent
-    * marker-and-mtime scheme as [[nationCsv]]), read back through
+  /** Snapshot root of a format-fixture export:
+    * `target/<area>/<sfName>`. Every export below publishes through
+    * [[ManifestStore.ensureSnapshot]] keyed on its source stamp (plus the
+    * staged count and write-contract version where it has them) and
+    * reads the returned immutable snapshot.
+    */
+  private def fixtureRoot(area: String, sfDir: String): File =
+    new File(s"${sys.props("user.dir")}/target/$area/${new File(sfDir).getName}")
+
+  private def sourceOf(sfDir: String, table: String): String =
+    Staging.sourceStamp(Seq(new File(path(sfDir, table))))
+
+  /** The nation dim as a JSON-lines export, read back through
     * [[jsonSource]]'s explicit-schema permissive contract.
     */
   def nationJson(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfName = new java.io.File(sfDir).getName
-    val jsonDir = s"${sys.props("user.dir")}/target/jsondim/$sfName/nation"
-    val marker = new java.io.File(s"$jsonDir/_SUCCESS")
-    val source = new java.io.File(path(sfDir, "nation"))
-    val stampFile = new java.io.File(s"$jsonDir/_graft_source")
-    val stamp = Staging.sourceStamp(Seq(source))
-    if (!marker.exists() || !stampFile.exists() ||
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) != stamp) Staging.timedRebuild {
+    val snap = ManifestStore.ensureSnapshot(
+        new File(fixtureRoot("jsondim", sfDir), "nation"), sourceOf(sfDir, "nation")) { p =>
       nation(spark, sfDir).select(col("n_nationkey"), col("n_name"))
-        .coalesce(1)
-        .write.mode("overwrite").json(jsonDir)
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
+        .coalesce(1).write.json(p)
     }
-    jsonSource(spark, jsonDir, StructType(Seq(
+    jsonSource(spark, snap.getAbsolutePath, StructType(Seq(
       StructField("n_nationkey", IntegerType),
       StructField("n_name", StringType))))
       .filter(col("_corrupt_record").isNull)
       .drop("_corrupt_record")
   }
 
-  /** The supplier dim as an ORC export (same idempotent marker-and-stamp
-    * scheme as [[nationCsv]]/[[nationJson]]) — the third self-describing
+  /** The supplier dim as an ORC export — the third self-describing
     * columnar format beside parquet: ORC ships with Spark (no extra
     * jars), preserves the full type lattice (int32/int64/double/string
     * here, unlike CSV's all-strings or JSON's doubles-only numerics),
@@ -312,33 +301,24 @@ object Tables {
     * acctbal double would mismatch.
     */
   def supplierOrc(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfName = new java.io.File(sfDir).getName
-    val orcDir = s"${sys.props("user.dir")}/target/orcdim/$sfName/supplier"
-    val marker = new java.io.File(s"$orcDir/_SUCCESS")
-    val source = new java.io.File(path(sfDir, "supplier"))
-    val stampFile = new java.io.File(s"$orcDir/_graft_source")
-    val stamp = Staging.sourceStamp(Seq(source))
-    if (!marker.exists() || !stampFile.exists() ||
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) != stamp) Staging.timedRebuild {
-      supplier(spark, sfDir)
-        .coalesce(1)
-        .write.mode("overwrite").orc(orcDir)
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
+    val snap = ManifestStore.ensureSnapshot(
+        new File(fixtureRoot("orcdim", sfDir), "supplier"), sourceOf(sfDir, "supplier")) { p =>
+      supplier(spark, sfDir).coalesce(1).write.orc(p)
     }
-    spark.read.orc(orcDir)
+    spark.read.orc(snap.getAbsolutePath)
   }
 
   /** os2 asset staging: a BOUNDED id-prefix of the documents corpus
-    * exported once as one raw `.bin` file per document (marker-and-stamp
-    * idempotence, the [[nationCsv]] scheme), then read back through
-    * Spark's `binaryFile` source — THE ingest format for multimodal
-    * asset directories (images/audio/video as files): each file becomes
-    * one row (path, modificationTime, length, content), the scan
-    * parallelizes across files, and `pathGlobFilter`/predicate pushdown
-    * on the metadata columns prune at the listing. The export collect is
-    * bounded (`nAssets` = 50 rows) — a fixture-staging step, not a data
-    * path; at 100 TB the files already exist (a crawl's asset store) and
-    * ONLY the binaryFile read runs.
+    * exported once as one raw `.bin` file per document, then read back
+    * through Spark's `binaryFile` source — THE ingest format for
+    * multimodal asset directories (images/audio/video as files): each
+    * file becomes one row (path, modificationTime, length, content), the
+    * scan parallelizes across files, and `pathGlobFilter`/predicate
+    * pushdown on the metadata columns prune at the listing. The export
+    * collect is bounded (`nAssets` = 50 rows) — a fixture-staging step,
+    * not a data path; at 100 TB the files already exist (a crawl's asset
+    * store) and ONLY the binaryFile read runs. The count is in the spec:
+    * a different `nAssets` publishes a new snapshot, never a stale prefix.
     *
     * 100 TB caveat, found by the adversarial-corpus differential run:
     * Spark's file listing DROPS zero-byte files, so an empty asset
@@ -353,24 +333,16 @@ object Tables {
     * that keeps the dropped asset visible to the reconciliation.
     */
   def binaryAssets(spark: SparkSession, sfDir: String,
-      nAssets: Int = Os2AssetCount): DataFrame = {
-    val sfName = new java.io.File(sfDir).getName
-    val binDir = s"${sys.props("user.dir")}/target/binassets/$sfName/docs"
-    val marker = new java.io.File(s"$binDir/_SUCCESS")
-    val source = new java.io.File(path(sfDir, "documents"))
-    val stampFile = new java.io.File(s"$binDir/_graft_source")
-    // the count is part of the stamp: a call with a different nAssets
-    // must restage, not silently serve the previously staged prefix
-    val stamp = Staging.sourceStamp(Seq(source)) + s":n=$nAssets:bin-v2"
-    val manifestFile = new java.io.File(s"$binDir/graft_manifest.tsv")
-    if (!marker.exists() || !stampFile.exists() || !manifestFile.exists() ||
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) != stamp) Staging.timedRebuild {
-      new java.io.File(binDir).mkdirs()
-      // clear stale exports first — a shrunk nAssets must not leave
-      // orphan .bin files for the glob to pick up
-      Option(new java.io.File(binDir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.endsWith(".bin") || f.getName == "_SUCCESS")
-        .foreach(_.delete())
+      nAssets: Int = Os2AssetCount): DataFrame =
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.bin")
+      .load(binaryAssetsSnap(spark, sfDir, nAssets).getAbsolutePath)
+
+  private def binaryAssetsSnap(
+      spark: SparkSession, sfDir: String, nAssets: Int): File =
+    ManifestStore.ensureSnapshot(new File(fixtureRoot("binassets", sfDir), "docs"),
+        sourceOf(sfDir, "documents") + s":n=$nAssets:bin-v2") { p =>
+      new File(p).mkdirs()
       // bounded collect: nAssets (doc_id, text) rows, the fixture export
       val manifest = new StringBuilder
       documents(spark, sfDir).filter(col("doc_id") < nAssets)
@@ -378,47 +350,36 @@ object Tables {
           val name = f"doc_${r.getLong(0)}%05d.bin"
           // NULL text stages as an empty asset (a web dump's deleted
           // page): the writer must not NPE mid-loop and leave a
-          // markerless half-written store
+          // half-written snapshot
           val bytes = Option(r.getString(1)).getOrElse("")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$binDir/$name"), bytes)
+            .getBytes(StandardCharsets.UTF_8)
+          Files.write(Paths.get(s"$p/$name"), bytes)
           // the manifest records what the WRITER believes it staged —
           // (name, byte length) per asset — so mm10 can reconcile the
           // scan against it (Spark's listing drops zero-byte files; the
           // manifest is the only place such an asset remains visible)
           manifest.append(name).append('\t').append(bytes.length).append('\n')
         }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$binDir/graft_manifest.tsv"),
-        manifest.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
+      Files.write(Paths.get(s"$p/graft_manifest.tsv"),
+        manifest.toString.getBytes(StandardCharsets.UTF_8))
     }
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.bin")
-      .load(binDir)
-  }
 
   /** The os2 staging MANIFEST — (file_name, n_bytes) per asset as the
     * writer recorded them ([[binaryAssets]] writes it next to the
-    * `.bin` files; calling this ensures the staging ran). The
-    * reconciliation input for mm10: a store's manifest is ground truth
-    * for what SHOULD be scannable, and the one artifact that still sees
-    * assets Spark's zero-byte-dropping file listing cannot.
+    * `.bin` files in the same snapshot). The reconciliation input for
+    * mm10: a store's manifest is ground truth for what SHOULD be
+    * scannable, and the one artifact that still sees assets Spark's
+    * zero-byte-dropping file listing cannot.
     */
   def assetManifest(spark: SparkSession, sfDir: String,
-      nAssets: Int = Os2AssetCount): DataFrame = {
-    binaryAssets(spark, sfDir, nAssets) // idempotent ensure
-    val sfName = new java.io.File(sfDir).getName
-    val binDir = s"${sys.props("user.dir")}/target/binassets/$sfName/docs"
+      nAssets: Int = Os2AssetCount): DataFrame =
     spark.read
       .option("sep", "\t")
       .schema(StructType(Seq(
         StructField("file_name", StringType),
         StructField("manifest_bytes", LongType))))
-      .csv(s"$binDir/graft_manifest.tsv")
-  }
+      .csv(new File(binaryAssetsSnap(spark, sfDir, nAssets), "graft_manifest.tsv")
+        .getAbsolutePath)
 
   /** mm11 staging: a bounded document prefix exported once as a
     * WEBDATASET-STYLE sample directory — one `sample_%05d.<ext>` file
@@ -428,9 +389,8 @@ object Tables {
     * the un-tarred form is what object stores actually serve). The
     * [[Mm11ClsDropMod]]/[[Mm11JsonDropMod]] rules deterministically
     * withhold modalities, so the staged store CONTAINS the incomplete
-    * samples mm11's assembly must surface. Marker-and-stamp idempotence
-    * (the [[binaryAssets]] scheme, count + contract version in the
-    * stamp; stale-file sweep so a shrunk count leaves no orphans).
+    * samples mm11's assembly must surface. The count, the drop rules and
+    * the contract version ride in the spec.
     * Zero-byte payloads are never WRITTEN: Spark's binaryFile listing
     * silently drops empty files (the documented os2 caveat), so the
     * staging contract is "no bytes ⇒ no file" — an empty modality is
@@ -438,28 +398,27 @@ object Tables {
     * oracle sides, never a silent listing gap.
     */
   def wdSamples(spark: SparkSession, sfDir: String,
-      nSamples: Int = Mm11SampleCount): DataFrame = {
-    val sfName = new java.io.File(sfDir).getName
-    val wdDir = s"${sys.props("user.dir")}/target/wdsamples/$sfName/shard0"
-    val marker = new java.io.File(s"$wdDir/_SUCCESS")
-    val source = new java.io.File(path(sfDir, "documents"))
-    val stampFile = new java.io.File(s"$wdDir/_graft_source")
-    val stamp = Staging.sourceStamp(Seq(source)) +
+      nSamples: Int = Mm11SampleCount): DataFrame =
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", "sample_*")
+      .load(wdSamplesSnap(spark, sfDir, nSamples)._1.getAbsolutePath)
+
+  /** The [[wdSamples]] snapshot dir and the spec it was published under. */
+  private def wdSamplesSnap(
+      spark: SparkSession, sfDir: String, nSamples: Int): (File, String) = {
+    val spec = sourceOf(sfDir, "documents") +
       s":n=$nSamples:drop=$Mm11ClsDropMod/$Mm11ClsDropRem," +
       s"$Mm11JsonDropMod/$Mm11JsonDropRem:wd-v3"
-    if (!marker.exists() || !stampFile.exists() ||
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) != stamp) Staging.timedRebuild {
-      new java.io.File(wdDir).mkdirs()
-      Option(new java.io.File(wdDir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("sample_") || f.getName == "_SUCCESS")
-        .foreach(_.delete())
-      val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val snap = ManifestStore.ensureSnapshot(
+        new File(fixtureRoot("wdsamples", sfDir), "shard0"), spec) { p =>
+      new File(p).mkdirs()
+      val utf8 = StandardCharsets.UTF_8
       // bounded collect: nSamples fixture rows (the os2 posture — at
       // 100 TB the sample store already exists, only the scan runs)
       // JSON-escape the interpolated string and null-coalesce every
       // text field: an adversarial dimension corpus plants quotes,
       // backslashes and NULLs in exactly these columns, and a staging
-      // writer that NPEs mid-loop leaves a markerless half-written store
+      // writer that NPEs mid-loop leaves a half-written snapshot
       def jsonStr(v: String): String =
         "\"" + v.flatMap {
           case '"' => "\\\""
@@ -482,8 +441,7 @@ object Tables {
           // incomplete sample on both sides, never a silent listing gap.
           def put(ext: String, bytes: Array[Byte]): Unit =
             if (bytes.nonEmpty)
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(f"$wdDir/sample_$id%05d.$ext"), bytes)
+              Files.write(Paths.get(f"$p/sample_$id%05d.$ext"), bytes)
           put("txt", str(1).getBytes(utf8))
           if (id % Mm11ClsDropMod != Mm11ClsDropRem)
             put("cls", str(2).getBytes(utf8))
@@ -491,12 +449,8 @@ object Tables {
             put("json",
               s"""{"doc_id":$id,"source":${jsonStr(str(3))}}""".getBytes(utf8))
         }
-      java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
     }
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "sample_*")
-      .load(wdDir)
+    (snap, spec)
   }
 
   /** mm12 staging: the [[wdSamples]] store tarred into ONE WebDataset
@@ -508,41 +462,25 @@ object Tables {
     * guards fail loudly on >100-byte names and ≥8 GiB members), members
     * sorted by name, so the shard's BYTES — not just its member list —
     * are stable across re-stages and the md5-bearing verdict rows stay
-    * hash-gateable. Marker-and-stamp
-    * idempotence chained onto the wdSamples stamp: any change to the
-    * underlying sample store re-tars.
+    * hash-gateable. The spec chains onto the wdSamples spec: any change
+    * to the underlying sample store re-tars.
     */
   def wdTarShard(spark: SparkSession, sfDir: String,
       nSamples: Int = Mm11SampleCount): DataFrame = {
-    wdSamples(spark, sfDir, nSamples) // ensure the sample store exists
-    val sfName = new java.io.File(sfDir).getName
-    val wdDir = s"${sys.props("user.dir")}/target/wdsamples/$sfName/shard0"
-    val tarDir = s"${sys.props("user.dir")}/target/wdtar/$sfName"
-    val marker = new java.io.File(s"$tarDir/_SUCCESS")
-    val stampFile = new java.io.File(s"$tarDir/_graft_source")
-    val srcStamp = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(s"$wdDir/_graft_source").toPath))
-    val stamp = srcStamp + ":tar-v1"
-    if (!marker.exists() || !stampFile.exists() ||
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) != stamp) Staging.timedRebuild {
-      new java.io.File(tarDir).mkdirs()
-      val files = Option(new java.io.File(wdDir).listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.startsWith("sample_")).sortBy(_.getName)
+    val (samples, samplesSpec) = wdSamplesSnap(spark, sfDir, nSamples)
+    val snap = ManifestStore.ensureSnapshot(
+        fixtureRoot("wdtar", sfDir), samplesSpec + ":tar-v1") { p =>
       val out = new java.io.ByteArrayOutputStream()
-      files.foreach { f =>
-        UstarWriter.writeMember(out, f.getName,
-          java.nio.file.Files.readAllBytes(f.toPath))
-      }
+      Option(samples.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("sample_")).sortBy(_.getName)
+        .foreach(f => UstarWriter.writeMember(out, f.getName, Files.readAllBytes(f.toPath)))
       UstarWriter.terminate(out)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tarDir/shard0.tar"), out.toByteArray)
-      java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
+      new File(p).mkdirs()
+      Files.write(Paths.get(s"$p/shard0.tar"), out.toByteArray)
     }
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.tar")
-      .load(tarDir)
+      .load(snap.getAbsolutePath)
   }
 
   /** os3 staging: a bounded document prefix exported once as GZIP
@@ -550,7 +488,7 @@ object Tables {
     * (WET extracts, CC dumps, vendor deliveries are `.jsonl.gz`) — then
     * read back through the [[jsonSource]] explicit-schema PERMISSIVE
     * contract; Spark's codec layer decompresses transparently at the
-    * scan. Marker-and-stamp idempotence (the [[nationCsv]] scheme).
+    * scan. The count is in the spec: a different `nDocs` restages.
     * Note the 100 TB posture difference from parquet/ORC: a gzip member
     * is NOT splittable, so parallelism = file count — crawl dumps ship
     * thousands of shard files, and the reader scales with them, never
@@ -558,23 +496,15 @@ object Tables {
     */
   def documentsJsonGz(spark: SparkSession, sfDir: String,
       nDocs: Int = Os3DocCount): DataFrame = {
-    val sfName = new java.io.File(sfDir).getName
-    val gzDir = s"${sys.props("user.dir")}/target/gzdocs/$sfName/documents"
-    val marker = new java.io.File(s"$gzDir/_SUCCESS")
-    val source = new java.io.File(path(sfDir, "documents"))
-    val stampFile = new java.io.File(s"$gzDir/_graft_source")
-    // count in the stamp: a different nDocs restages (the write is
-    // mode=overwrite, so no stale-file sweep is needed here)
-    val stamp = Staging.sourceStamp(Seq(source)) + s":n=$nDocs"
-    if (!marker.exists() || !stampFile.exists() ||
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) != stamp) Staging.timedRebuild {
+    val snap = ManifestStore.ensureSnapshot(
+        new File(fixtureRoot("gzdocs", sfDir), "documents"),
+        sourceOf(sfDir, "documents") + s":n=$nDocs") { p =>
       documents(spark, sfDir).filter(col("doc_id") < nDocs)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
         .coalesce(1)
-        .write.mode("overwrite").option("compression", "gzip").json(gzDir)
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
+        .write.option("compression", "gzip").json(p)
     }
-    jsonSource(spark, gzDir, StructType(Seq(
+    jsonSource(spark, snap.getAbsolutePath, StructType(Seq(
       StructField("doc_id", LongType),
       StructField("lang", StringType),
       StructField("source", StringType),
@@ -583,23 +513,21 @@ object Tables {
       .drop("_corrupt_record")
   }
 
+  /** S3 — CSV dimension source (the reference's zones lookup is a CSV,
+    * assignment1.ipynb:239, app.py:102). The driver stages parquet only, so
+    * the projected nation dim is exported to CSV once and read back with
+    * an EXPLICIT schema — inferSchema is nondeterministic under sampling
+    * and costs an extra scan. The WRITE-CONTRACT version rides in the
+    * spec: a change to the value-faithfulness options below must restage
+    * files written under the old contract.
+    */
   def nationCsv(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfName = new java.io.File(sfDir).getName
-    val csvDir = s"${sys.props("user.dir")}/target/csvdim/$sfName/nation"
-    val marker = new java.io.File(s"$csvDir/_SUCCESS")
-    val source = new java.io.File(path(sfDir, "nation"))
-    // rewrite when absent OR stale (the source's (mtime, length) stamp
-    // changed — sees same-second rewrites a marker-mtime compare misses).
-    // The WRITE-CONTRACT version rides in the stamp (the os2 nAssets
-    // pattern): a change to the value-faithfulness options below must
-    // restage files written under the old contract
-    val stampFile = new java.io.File(s"$csvDir/_graft_source")
-    val stamp = Staging.sourceStamp(Seq(source)) + ":csv-v2"
-    if (!marker.exists() || !stampFile.exists() ||
-        new String(java.nio.file.Files.readAllBytes(stampFile.toPath)) != stamp) Staging.timedRebuild {
+    val snap = ManifestStore.ensureSnapshot(
+        new File(fixtureRoot("csvdim", sfDir), "nation"),
+        sourceOf(sfDir, "nation") + ":csv-v2") { p =>
       nation(spark, sfDir).select(col("n_nationkey"), col("n_name"))
         .coalesce(1)
-        .write.mode("overwrite").option("header", "true")
+        .write.option("header", "true")
         // value-faithful write contract (each default found LOSSY by the
         // adversarial dimension replay): the writer TRIMS field
         // whitespace by default (" leading space" came back bare), and
@@ -608,8 +536,7 @@ object Tables {
         .option("ignoreLeadingWhiteSpace", "false")
         .option("ignoreTrailingWhiteSpace", "false")
         .option("nullValue", "\\N")
-        .csv(csvDir)
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes)
+        .csv(p)
     }
     spark.read
       .option("header", "true")
@@ -626,7 +553,7 @@ object Tables {
       .schema(StructType(Seq(
         StructField("n_nationkey", IntegerType),
         StructField("n_name", StringType))))
-      .csv(csvDir)
+      .csv(snap.getAbsolutePath)
   }
 }
 

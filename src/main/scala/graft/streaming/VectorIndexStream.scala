@@ -128,42 +128,29 @@ object VectorIndexStream {
       s"/compacted_k${kTag}_i$iters"
   }
 
-  /** Build (or reuse) the compacted segment under the staging lock,
-    * keyed on (params, embeddings source stamp) — the same staleness
-    * contract as the base artifact, so a serve against an unchanged
-    * corpus is READ-ONLY: no stream drain, no rewrite (round 9 rewrote
-    * the segment on every call, which is not a serve path's 100×
-    * shape). Only when the stamp is stale does it run the maintenance
-    * pipeline (base ensure + streaming delta ingest) and fold base ∪
-    * delta into one cell-partitioned segment: one shuffle on the cell
-    * id aligns each cell with one task ⇒ exactly ONE file per cell
-    * (asserted in spec), restoring the base segment's read shape.
+  /** Build (or reuse) the compacted segment as a snapshot keyed on
+    * (params, embeddings source stamp) — the same staleness contract as
+    * the base artifact, so a serve against an unchanged corpus is
+    * READ-ONLY: no stream drain, no rewrite. Only a stale spec runs the
+    * maintenance pipeline (base ensure + streaming delta ingest) and
+    * folds base ∪ delta into one cell-partitioned segment: one shuffle on
+    * the cell id aligns each cell with one task ⇒ exactly ONE file per
+    * cell (asserted in spec), restoring the base segment's read shape.
+    * The publish nests the base artifact's own ensure; each store locks
+    * its own root, so the nesting never re-enters a lock.
     */
   private def ensureCompactedIndex(
       spark: SparkSession, sfDir: String, kCells: Int, iters: Int): String = {
-    val path = compactedIndexPath(sfDir, kCells, iters)
-    val source = new java.io.File(Tables.path(sfDir, "embeddings"))
     val spec = s"sim8-compacted-v2 adm=finite-1e4-nonzero k=$kCells iters=$iters half-split\n" +
-      graft.sources.Staging.sourceStamp(Seq(source))
-    // lock the artifact's OWN dir, not the shared target/ivf/<sf> root:
-    // a stale build nests ensureLearnedIvf (via maintainedIndex), which
-    // locks that root — two lock() calls on one file in one JVM throw
-    // OverlappingFileLockException. Lock order is strictly compacted →
-    // base (the base path never locks the compacted one), so no cycle.
-    graft.sources.Staging.withExclusiveLock(new java.io.File(path)) {
-      val marker = new java.io.File(s"$path/_marker")
-      val specFile = new java.io.File(s"$path/_graft_spec")
-      val fresh = marker.exists() && specFile.exists() &&
-        new String(java.nio.file.Files.readAllBytes(specFile.toPath)) == spec
-      if (!fresh) {
-        val (corpus, _, _) = maintainedIndex(spark, sfDir, kCells, iters)
-        corpus.repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-        java.nio.file.Files.write(specFile.toPath, spec.getBytes)
-        if (!marker.exists()) { java.nio.file.Files.createFile(marker.toPath); () }
-      }
-    }
-    path
+      graft.sources.Staging.sourceStamp(
+        Seq(new java.io.File(Tables.path(sfDir, "embeddings"))))
+    graft.sources.ManifestStore.ensureSnapshot(
+        new java.io.File(compactedIndexPath(sfDir, kCells, iters)), spec,
+        graft.sources.ManifestStore.IndexReaderGraceMs) { snap =>
+      val (corpus, _, _) = maintainedIndex(spark, sfDir, kCells, iters)
+      corpus.repartition(col("cell"))
+        .write.partitionBy("cell").parquet(s"$snap/cells")
+    }.getAbsolutePath
   }
 
   /** sim8 — COMPACTION of the maintained index: fold the streaming delta
@@ -174,7 +161,7 @@ object VectorIndexStream {
     * delta is a `_spark_metadata` sink dir, which file-level compaction
     * correctly refuses — index compaction is a REWRITE under the index's
     * own layout contract, not a file shuffle). The segment is a
-    * build-once LOCKED ARTIFACT ([[ensureCompactedIndex]]): a repeat
+    * build-once snapshot artifact ([[ensureCompactedIndex]]): a repeat
     * serve touches nothing but parquet reads — centroids from the base
     * artifact, cells from the compacted one. The serve tail and
     * therefore the answer are bit-identical to sim7's (same oracle

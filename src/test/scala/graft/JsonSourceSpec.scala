@@ -6,9 +6,17 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.Tables
+import graft.sources.{ManifestStore, Tables}
 
 class JsonSourceSpec extends AnyFunSuite with SparkFixture {
+
+  /** The current snapshot dir of the fixture export rooted at `target/<rel>`. */
+  private def snapOf(rel: String): File = {
+    val root = new File(s"${sys.props("user.dir")}/target/$rel")
+    val (id, _) = ManifestStore.currentPointer(root)
+      .getOrElse(fail(s"no manifest pointer under $root"))
+    ManifestStore.snapDir(root, id)
+  }
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType), StructField("name", StringType)))
@@ -47,7 +55,7 @@ class JsonSourceSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
     assert(a === b) // doubles compared exactly: the roundtrip is bit-level
     // second call must be a pure read: the staged file's mtime is stable
-    val dir = new File(s"${sys.props("user.dir")}/target/orcdim/sf0.001/supplier")
+    val dir = snapOf("orcdim/sf0.001/supplier")
     val orc = dir.listFiles().filter(_.getName.endsWith(".orc")).head
     val mtime = orc.lastModified()
     Tables.supplierOrc(spark, sf001).count()
@@ -66,11 +74,20 @@ class JsonSourceSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(assets.toSeq === want.toSeq)
     // second call must be a pure read (the stamp guard holds)
-    val dir = new File(s"${sys.props("user.dir")}/target/binassets/sf0.001/docs")
+    val dir = snapOf("binassets/sf0.001/docs")
     val f = dir.listFiles().filter(_.getName.endsWith(".bin")).head
     val mtime = f.lastModified()
     Tables.binaryAssets(spark, sf001).count()
     assert(f.lastModified() === mtime, "stamp-guarded staging re-wrote the assets")
+  }
+
+  test("binaryAssets: a frame read before a republish still scans its own snapshot") {
+    val pinned = Tables.binaryAssets(spark, sf001)
+    // a different count publishes a new snapshot; the pinned frame's
+    // listing points into the previous one, which GC retains
+    assert(Tables.binaryAssets(spark, sf001, nAssets = 40).count() === 40)
+    assert(pinned.count() === 50, "republish deleted files under a pinned reader")
+    assert(Tables.binaryAssets(spark, sf001).count() === 50)
   }
 
   test("documentsJsonGz: gzip JSONL round-trips byte-exactly through the codec layer, stamp-guarded") {
@@ -82,7 +99,7 @@ class JsonSourceSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
     assert(got.toSeq === want.toSeq)
     // the staged file is genuinely gzip (magic 1f 8b), and the guard holds
-    val dir = new File(s"${sys.props("user.dir")}/target/gzdocs/sf0.001/documents")
+    val dir = snapOf("gzdocs/sf0.001/documents")
     val gz = dir.listFiles().filter(_.getName.endsWith(".json.gz")).head
     val head = java.nio.file.Files.readAllBytes(gz.toPath).take(2)
     assert((head(0) & 0xFF) === 0x1F && (head(1) & 0xFF) === 0x8B)

@@ -647,8 +647,9 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
     graft.sources.Staging.deleteRecursively(dir)
     // the staged registry shard stays stamp-guarded: a second call must
     // not re-tar (byte-stable staging)
-    val tarFile = new java.io.File(
-      s"${sys.props("user.dir")}/target/wdtar/sf0.001/shard0.tar")
+    val tarRoot = new java.io.File(s"${sys.props("user.dir")}/target/wdtar/sf0.001")
+    val tarFile = new java.io.File(graft.sources.ManifestStore.snapDir(tarRoot,
+      graft.sources.ManifestStore.currentPointer(tarRoot).get._1), "shard0.tar")
     val mtime = tarFile.lastModified()
     Tables.wdTarShard(spark, sf001).count()
     assert(tarFile.lastModified() === mtime, "stamp-guarded tar staging re-wrote")
@@ -717,8 +718,10 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.length === Tables.Mm11SampleCount)
     // n_bytes is the REAL staged store's per-sample file-size sum
-    val dir = new java.io.File(
+    val root = new java.io.File(
       s"${sys.props("user.dir")}/target/wdsamples/sf0.001/shard0")
+    val dir = graft.sources.ManifestStore.snapDir(root,
+      graft.sources.ManifestStore.currentPointer(root).get._1)
     val real = dir.listFiles().filter(_.getName.startsWith("sample_"))
       .groupBy(f => f.getName.split("\\.")(0).split("_")(1).toLong)
       .view.mapValues(_.map(_.length).sum).toMap

@@ -82,8 +82,10 @@ class VectorIndexStreamSpec extends AnyFunSuite with SparkFixture {
       .collect().map(_.toSeq).toSeq
     assert(got === viaSim7) // compaction changes layout, never the answer
     // artifact layout contract: exactly ONE data file per cell dir
-    val cellsDir = new java.io.File(
-      VectorIndexStream.compactedIndexPath(sf001, 0, 5), "cells")
+    val artifactRoot = new java.io.File(
+      VectorIndexStream.compactedIndexPath(sf001, 0, 5))
+    val cellsDir = new java.io.File(graft.sources.ManifestStore.snapDir(artifactRoot,
+      graft.sources.ManifestStore.currentPointer(artifactRoot).get._1), "cells")
     val cellDirs = cellsDir.listFiles().filter(_.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty)
     cellDirs.foreach { d =>
@@ -100,8 +102,6 @@ class VectorIndexStreamSpec extends AnyFunSuite with SparkFixture {
         else Seq(x)
       walk(f).map(x => x.getPath -> x.lastModified()).toMap
     }
-    val artifactRoot = new java.io.File(
-      VectorIndexStream.compactedIndexPath(sf001, 0, 5))
     val before = stamps(artifactRoot)
     val again = VectorIndexStream.sim8ServeCompacted(spark, sf001)
       .collect().map(_.toSeq).toSeq
