@@ -7,20 +7,23 @@ import org.apache.spark.sql.SparkSession
   * a hand-rolled builder is exactly how round 1 shipped a Verify that
   * lacked `nanosAsLong` and the extensions registration.
   *
-  * SEQUENTIAL-PER-SESSION INVARIANT (r19 advisor): several operators flip
-  * session-global conf around a scoped region and restore it in `finally`
-  * — `spark.sql.shuffle.partitions` in the iterative graph loops
+  * CONCURRENCY RULE (per session): jobs of one session MAY run
+  * concurrently, but no session-conf flip or temp-view swap may be in
+  * flight alongside them. Several operators flip session-global conf
+  * around a scoped region and restore it in `finally` —
+  * `spark.sql.shuffle.partitions` in the iterative graph loops
   * (Dedup.dupClusters, Graphs.pageRank) and the streaming gate starts
   * (EventStreams.runToParquet), `partitionOverwriteMode` in CleanStore's
-  * refresh — and Sql.queries swaps the `lineitem` temp view at
-  * analysis time for sql9. These are safe because queries run STRICTLY
-  * SEQUENTIALLY within a session (the Bench/Verify/test contract). A
-  * future concurrent client must NOT share one session with these
-  * operators: a query planned inside another query's flip window would
-  * inherit graph-scale partitioning or the swapped view. The concurrent
-  * posture is one cloned session per client (`spark.newSession()` shares
-  * the context but isolates conf + temp views), or replacing the flips
-  * with hint-based repartitioning where Spark grows the API for it.
+  * refresh — and Sql.queries swaps the `lineitem` temp view at analysis
+  * time for sql9. A query planned inside another thread's flip window
+  * would inherit graph-scale partitioning or the swapped view, so those
+  * operators run alone (the Bench/Verify/test contract runs queries
+  * sequentially). `Pipeline.run`'s concurrent stages (the two clean sinks,
+  * then the six feeds, via [[Concurrently]]) contain no flip and no swap.
+  * A concurrent client that needs the flipping operators takes one cloned
+  * session each (`spark.newSession()` shares the context but isolates
+  * conf + temp views), or the flips are replaced with hint-based
+  * repartitioning where Spark grows the API for it.
   */
 object GraftSession {
   def build(cpus: String): SparkSession = {

@@ -46,7 +46,7 @@ object CleanStore {
 
   /** The derive stage over an already-CLEANED lineitem frame — one source
     * of truth for the synthetic receipt date and the time-feature bundle
-    * (the Pipeline cleans with `cleanAndCount` for its accounting and
+    * (the Pipeline cleans with `cleanWithAccounting` for its accounting and
     * hands the cleaned frame here; editing the derive in one place keeps
     * the Pipeline-served feeds and the canonical staging identical).
     */

@@ -25,37 +25,31 @@ object Cleaning {
   def clean(df: DataFrame, rules: Seq[Rule]): DataFrame =
     df.filter(rules.map(_.predicate).reduce(_ && _))
 
-  /** Cleaned frame + an [[Observation]] whose metrics (after any action on
-    * the returned frame) hold `removed_<rule>` counts with the reference's
-    * sequential attribution, plus `rows_in` / `rows_out`.
+  /** Cleaned frame + an [[Observation]] carrying the whole accounting:
+    * `rows_in`, `removed_<rule>` with the reference's sequential
+    * attribution, `removed_total` and `rows_out` — the same semantics as
+    * [[accountingAgg]] (a null predicate fails its rule). The metrics are
+    * filled by whatever action runs the returned frame (a parquet write
+    * is enough; no extra count job). Read them with [[accounting]] only
+    * after that action has SUCCEEDED: `Observation.get` waits for a
+    * successful action and never returns if it failed.
     */
   def cleanWithAccounting(
       df: DataFrame,
       rules: Seq[Rule]): (DataFrame, Observation) = {
     val obs = Observation("clean")
-    // Rule i counts rows failing predicate i that passed predicates 0..i-1.
-    val metrics = rules.zipWithIndex.map { case (r, i) =>
-      val survivedEarlier =
-        rules.take(i).map(_.predicate).foldLeft(lit(true))(_ && _)
-      count(when(survivedEarlier && !coalesce(r.predicate, lit(false)), 1))
-        .as(s"removed_${r.name}")
-    } :+ count(lit(1)).as("rows_in")
+    val metrics = count(lit(1)).as("rows_in") +: removedCounts(rules) :+
+      count(when(!passedAll(rules), 1)).as("removed_total") :+
+      count(when(passedAll(rules), 1)).as("rows_out")
     val observed = df.observe(obs, metrics.head, metrics.tail: _*)
     (clean(observed, rules), obs)
   }
 
-  /** Convenience: run the accounting eagerly and return (cleaned, counts).
-    * Triggers one job; counts include `rows_in`, `rows_out`, `removed_total`.
+  /** The metrics of a [[cleanWithAccounting]] observation whose action has
+    * completed successfully.
     */
-  def cleanAndCount(
-      df: DataFrame,
-      rules: Seq[Rule]): (DataFrame, Map[String, Long]) = {
-    val (cleaned, obs) = cleanWithAccounting(df, rules)
-    val rowsOut = cleaned.count()
-    val raw = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
-    val removed = raw.filter(_._1.startsWith("removed_")).values.sum
-    (cleaned, raw ++ Map("rows_out" -> rowsOut, "removed_total" -> removed))
-  }
+  def accounting(obs: Observation): Map[String, Long] =
+    obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
 
   /** V9 as a query: the per-rule removal counts as a ONE-ROW DataFrame —
     * `rows_in, removed_<rule>..., rows_out` — with the reference's
@@ -65,16 +59,24 @@ object Cleaning {
     * conditional counts, unlike the observe() variant.
     */
   def accountingAgg(df: DataFrame, rules: Seq[Rule]): DataFrame = {
-    def passed(r: Rule): Column = coalesce(r.predicate, lit(false))
-    val metrics = rules.zipWithIndex.map { case (r, i) =>
+    val exprs = count(lit(1)).as("rows_in") +: removedCounts(rules) :+
+      count(when(passedAll(rules), 1)).as("rows_out")
+    df.agg(exprs.head, exprs.tail: _*)
+  }
+
+  private def passed(r: Rule): Column = coalesce(r.predicate, lit(false))
+
+  private def passedAll(rules: Seq[Rule]): Column = rules.map(passed).reduce(_ && _)
+
+  /** `removed_<rule>`: rule i counts the rows failing predicate i that
+    * passed predicates 0..i−1.
+    */
+  private def removedCounts(rules: Seq[Rule]): Seq[Column] =
+    rules.zipWithIndex.map { case (r, i) =>
       val survivedEarlier =
         rules.take(i).map(passed).foldLeft(lit(true))(_ && _)
       count(when(survivedEarlier && !passed(r), 1)).as(s"removed_${r.name}")
     }
-    val exprs = Seq(count(lit(1)).as("rows_in")) ++ metrics :+
-      count(when(rules.map(passed).reduce(_ && _), 1)).as("rows_out")
-    df.agg(exprs.head, exprs.tail: _*)
-  }
 
   /** Per-column null census (V10/A12): one aggregate row, `<col>_nulls`. */
   def nullCensus(df: DataFrame): DataFrame = {

@@ -19,6 +19,8 @@ import graft.sources.Tables
   * aggregate), so `coalesce(1)` writes one file per feed — the shape a
   * dashboard reader wants — without ever pulling fact-table data through
   * the driver. Parquet for typed consumers, JSON lines for web-facing ones.
+  * Being small, feeds are job-overhead-bound, not data-bound, so
+  * [[writeAll]] writes them concurrently to overlap that overhead.
   */
 object Feeds {
 
@@ -46,17 +48,22 @@ object Feeds {
   /** Materialize every feed under `outDir/<name>` (parquet) and
     * `outDir/<name>_json` (JSON lines) from explicit clean tables — the
     * Pipeline passes the tables it just staged, so the flow provably
-    * serves from its own sink. The aggregate is computed ONCE: the parquet
-    * lands first, the JSON twin re-reads that (tiny) file instead of
-    * re-running the scan-and-aggregate pipeline.
+    * serves from its own sink. The feeds are independent, so the six are
+    * written CONCURRENTLY ([[graft.Concurrently]]; their bodies set no
+    * session conf and swap no temp view). Each aggregate is still
+    * computed ONCE: its parquet lands first, the JSON twin re-reads that
+    * (tiny) file instead of re-running the scan-and-aggregate pipeline.
+    * Returns after every feed has finished; the first failure is rethrown.
     */
   def writeAll(spark: SparkSession, sfDir: String, outDir: String, served: Served): Unit = {
     val fs = feeds(served, spark, sfDir)
     require(fs.keySet == feedNames.toSet, "feed inventory out of sync")
-    fs.foreach { case (name, df) =>
-      writeFeed(df, s"$outDir/$name")
-      writeFeed(spark.read.parquet(s"$outDir/$name"), s"$outDir/${name}_json", "json")
-    }
+    graft.Concurrently.fork(fs.toSeq.map { case (name, df) =>
+      () => {
+        writeFeed(df, s"$outDir/$name")
+        writeFeed(spark.read.parquet(s"$outDir/$name"), s"$outDir/${name}_json", "json")
+      }
+    }).join()
   }
 
   /** Standalone entry: serve from the canonical [[CleanStore]] staging

@@ -86,6 +86,26 @@ object ManifestStore {
       .flatMap(d => scala.util.Try(d.getName.stripPrefix("snap=").toLong).toOption)
       .toSeq.sorted
 
+  /** Root-level files of the flat layout a root held before it published
+    * snapshots: a parquet write's `part-*` and `_SUCCESS`, the old
+    * `_graft_*` markers and stamps, and their Hadoop `.<name>.crc` twins.
+    * No reader looks at them (readers scan `snap=<n>` only).
+    */
+  private def isFlatLayoutDebris(name: String): Boolean = {
+    val base =
+      if (name.startsWith(".") && name.endsWith(".crc")) name.drop(1).dropRight(4) else name
+    base.startsWith("part-") || base == "_SUCCESS" || base.startsWith("_graft_")
+  }
+
+  /** Delete the flat-layout debris at the root — regular files only, never
+    * a directory, `_manifest`, `.graft_lock`, a `.superseded_*` tombstone
+    * or a `.manifest_tmp_*` pointer. Runs under the staging lock.
+    */
+  private def sweepFlatLayout(root: File): Unit =
+    Option(root.listFiles).getOrElse(Array.empty)
+      .filter(f => f.isFile && isFlatLayoutDebris(f.getName))
+      .foreach(_.delete())
+
   /** Resolve (publishing if needed) the snapshot directory for `spec` —
     * the pointer/publish/GC core shared by [[serve]] (plain parquet
     * stores) and the artifact stagings whose read path is not a flat
@@ -121,6 +141,7 @@ object ManifestStore {
               // debris of publishers killed before their swap
               snapIds(root).filter(i => pointed.forall(_ < i))
                 .foreach(i => Staging.deleteRecursively(snapDir(root, i)))
+              sweepFlatLayout(root)
               val dest = snapDir(root, id)
               write(dest.getAbsolutePath)
               // atomic pointer swap: old or new, never torn

@@ -41,14 +41,22 @@ class CleaningSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("cleanAndCount (observe-based) agrees with accountingAgg") {
-    val (cleaned, counts) = Cleaning.cleanAndCount(frame, rules)
-    assert(cleaned.count() === 2L)
-    expected.filter(_._1 != "rows_out").foreach { case (k, v) =>
-      assert(counts(k) === v, s"metric $k")
+  test("cleanWithAccounting: a parquet write alone fills every accountingAgg metric") {
+    val (cleaned, obs) = Cleaning.cleanWithAccounting(frame, rules)
+    val out = java.nio.file.Files.createTempDirectory("observed").toString
+    cleaned.write.mode("overwrite").parquet(out) // the only action: no count()
+    // bounded wait: Observation.get would block forever if the write had
+    // not filled the observation
+    scala.concurrent.Await.ready(obs.future, scala.concurrent.duration.Duration(60, "s"))
+    val counts = Cleaning.accounting(obs)
+    val agg = Cleaning.accountingAgg(frame, rules).collect().head
+    assert(counts.keySet === agg.schema.fieldNames.toSet + "removed_total")
+    agg.schema.fieldNames.foreach { k =>
+      assert(counts(k) === agg.getAs[Long](k), s"metric $k")
     }
-    assert(counts("rows_out") === 2L)
+    expected.foreach { case (k, v) => assert(counts(k) === v, s"metric $k") }
     assert(counts("removed_total") === 5L)
+    assert(spark.read.parquet(out).count() === 2L)
   }
 
   test("clean keeps exactly the rows passing every rule (null predicate = fail)") {

@@ -27,4 +27,26 @@ class FeedsSpec extends AnyFunSuite with SparkFixture {
       assert(jsonCount === expected.size.toLong, s"$name json row count")
     }
   }
+
+  test("writeAll: a failing feed surfaces its own exception after every feed has stopped") {
+    import org.apache.spark.sql.functions.expr
+    val out = Files.createTempDirectory("feeds_fail").toString
+    val served = Feeds.Served(
+      CleanStore.lineitem(spark, sf001),
+      CleanStore.events(spark, sf001)
+        .withColumn("value", expr("cast(raise_error('boom') as double)")))
+    val e = intercept[Throwable](Feeds.writeAll(spark, sf001, out, served))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], s"wrapped: $e")
+    assert(String.valueOf(e.getMessage).contains("boom"), s"not the original failure: $e")
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.isAlive && t.getName.startsWith(Concurrently.ThreadPrefix)),
+      "a feed thread outlived writeAll")
+    // the status store is fed by the listener bus, so it may trail the
+    // jobs' ends by a moment; every job has ended (its thread is gone)
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
 }

@@ -94,6 +94,31 @@ class ManifestStoreSpec extends AnyFunSuite with SparkFixture {
     } finally rm(root)
   }
 
+  test("publish sweeps the pre-snapshot flat layout's files, and only those") {
+    val root = Files.createTempDirectory("graft_ms_flat").toFile
+    try {
+      // a root that held a flat parquet write + markers before it moved
+      // to snapshots
+      val legacy = Seq("part-00000-abc.snappy.parquet", ".part-00000-abc.snappy.parquet.crc",
+        "_SUCCESS", "._SUCCESS.crc", "_graft_source", "_graft_spec", "._graft_spec.crc")
+      legacy.foreach(n => Files.write(new File(root, n).toPath, "x".getBytes))
+      // never swept: a directory named like debris, the lock, tombstones,
+      // a tmp pointer, an unrelated file
+      val keptDir = new File(root, "part-dir"); keptDir.mkdirs()
+      Files.write(new File(keptDir, "part-0.parquet").toPath, "x".getBytes)
+      val kept = Seq(".graft_lock", ".superseded_7", ".manifest_tmp_1", "notes.txt")
+      kept.foreach(n => Files.write(new File(root, n).toPath, "x".getBytes))
+
+      val df = ManifestStore.serve(spark, root, "v1")(writeN(10))
+      legacy.foreach(n => assert(!new File(root, n).exists(), s"$n not swept"))
+      (kept :+ "part-dir" :+ "part-dir/part-0.parquet" :+ "_manifest")
+        .foreach(n => assert(new File(root, n).exists(), s"$n swept"))
+      assert(df.count() === 10)
+      assert(df.agg(sum("v")).head.getLong(0) === 90L)
+      assert(snapIdsOf(root) === Seq(1L))
+    } finally rm(root)
+  }
+
   test("soak: lock-free readers under publish flips — zero aborts, only legal snapshots") {
     val root = Files.createTempDirectory("graft_ms_soak").toFile
     try {

@@ -56,6 +56,57 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       clean.filter("to_date(l_shipdate) BETWEEN '1995-03-01' AND '1995-03-31'").count())
   }
 
+  test("run: independent stages overlap as concurrent jobs; accounting equals accountingAgg") {
+    import org.apache.spark.scheduler._
+    // job id -> (start ms, top-level SQL execution, description); job id -> end ms
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, String)]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val marker = "pipelinespec-marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        val exec = Option(p.getProperty("spark.sql.execution.root.id"))
+          .orElse(Option(p.getProperty("spark.sql.execution.id"))).orNull
+        starts.put(e.jobId, (e.time, exec, p.getProperty("spark.job.description")))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        ends.put(e.jobId, e.time)
+        if (Option(starts.get(e.jobId)).exists(_._3 == marker)) markerDone.countDown()
+      }
+    }
+    val out = Files.createTempDirectory("pipeline_concurrent").toString
+    spark.sparkContext.addSparkListener(listener)
+    val res = try {
+      val r = Pipeline.run(spark, sf001, out)
+      // the listener bus is FIFO: once the marker job's end arrives, every
+      // event of the run before it has been delivered
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    import scala.jdk.CollectionConverters._
+    val jobs = starts.asScala.toSeq.collect {
+      case (id, (t0, exec, desc)) if desc != marker => (t0, ends.get(id), exec)
+    }
+    assert(jobs.size >= 8, s"expected the sinks' and feeds' jobs, got ${jobs.size}")
+    // two jobs of DIFFERENT top-level queries alive at once: one query's
+    // own adaptive stages overlapping does not count
+    val overlapping = for {
+      (a, i) <- jobs.zipWithIndex; (b, j) <- jobs.zipWithIndex
+      if i < j && a._3 != b._3 && a._1 < b._2 && b._1 < a._2
+    } yield (a, b)
+    assert(overlapping.nonEmpty, s"no two queries' jobs overlapped: $jobs")
+
+    val agg = graft.operators.Cleaning.accountingAgg(
+      Tables.lineitem(spark, sf001), graft.operators.Analytics.cleaningRules).collect().head
+    val expected = agg.getValuesMap[Long](agg.schema.fieldNames.toSeq)
+    assert(res.accounting === expected +
+      ("removed_total" -> expected.collect { case (k, v) if k.startsWith("removed_") => v }.sum))
+  }
+
   test("feed parity: feeds served from the streaming-ingested clean table equal the batch feeds") {
     // The last reference behavior unified end-to-end: the notebook writes
     // the clean table and the app recleans it per chart; here the SAME
