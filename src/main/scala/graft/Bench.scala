@@ -690,15 +690,15 @@ object Bench {
       .ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now()) + "-p" + ProcessHandle.current().pid()
     // Engine-behavior env knobs stamped into the record (r17 advisor,
-    // medium): SPARK_GRAFT_CONF and the gate-partition/state-provider/
-    // cpu overrides silently change engine behavior, so two records
+    // medium): SPARK_GRAFT_CONF and the gate-partition/pair-budget/cpu
+    // overrides silently change engine behavior, so two records
     // taken under different tuning were indistinguishable and benchdiff
     // attributed the delta to code — the same provenance failure class
     // the host-speed canary closes for hardware. Every knob is recorded
     // (empty string = unset), and benchdiff prints a TUNING DIFFERS
     // banner + suppresses wall-time comparison when they mismatch.
     val tuningJson = Seq("SPARK_GRAFT_CONF", "SPARK_GRAFT_GATE_PARTITIONS",
-      "SPARK_GRAFT_JOIN_GATE_PARTITIONS", "SPARK_GRAFT_ROCKSDB_STATE",
+      "SPARK_GRAFT_JOIN_GATE_PARTITIONS", "SPARK_GRAFT_MAX_PAIR_BUDGET",
       "SPARK_GRAFT_CPUS")
       .map(k => "\"" + k + "\":\"" +
         GraftSession.jsonEscape(sys.env.getOrElse(k, "")) + "\"")

@@ -11,10 +11,6 @@ package graft
   * CALLING thread: Spark's local properties (job group, description, any
   * span id a tracer set) are inheritable thread-locals, so jobs submitted
   * by a task carry the caller's properties. Nothing is pooled across calls.
-  *
-  * Only bodies that neither set session conf nor swap a temp view may run
-  * here (see [[GraftSession]]): those flips are session-global and a
-  * concurrent job would be planned inside them.
   */
 object Concurrently {
 

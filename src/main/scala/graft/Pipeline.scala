@@ -14,11 +14,7 @@ import graft.sources.{SchemaContract, Tables}
   * The stages form a small job graph run on the caller's session: the
   * removal accounting rides on the lineitem sink's write (an `observe()`,
   * not a count job), the two clean sinks run concurrently, then the six
-  * feeds run concurrently ([[Concurrently]]). None of these concurrent
-  * bodies (`CleanStore.cleanEvents`/`writeEvents`/`writeLineitem`, the
-  * `Analytics.q05/q06/q11/q12/q13/q15…On` feed bodies, `Tables.part`) sets
-  * session conf or swaps a temp view, which is what makes running them
-  * side by side on one session safe ([[GraftSession]]).
+  * feeds run concurrently ([[Concurrently]]).
   *
   * `runMain graft.Pipeline <sfDir> <outDir>` executes the whole flow and
   * prints the removal accounting + feed locations.

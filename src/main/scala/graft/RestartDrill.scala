@@ -2,7 +2,7 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -70,28 +70,26 @@ object RestartDrill {
       killAfter: Option[Int], statePartitions: Int): (DataFrame, Option[Long]) = {
     val out = new File(base, "out").getAbsolutePath
     val chk = new File(base, "chk").getAbsolutePath
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      def start() = frame().writeStream
-        .outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      val killedAt = killAfter.map { n =>
-        val q = start()
-        while (q.isActive && committedBatches(q) < n) Thread.sleep(50)
-        val at = committedBatches(q)
-        if (q.isActive) q.stop()
-        q.awaitTermination()
-        at
-      }
-      // the (re)start that drains to completion — for the baseline this
-      // is the only start; for the killed run it resumes the checkpoint
-      start().awaitTermination()
-      val schema = frame().schema
-      (spark.read.schema(schema).parquet(out), killedAt)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val stateSession = GraftSession.fork(spark,
+      "spark.sql.shuffle.partitions" -> statePartitions.toString)
+    def start() = GraftShim.rebind(frame(), stateSession).writeStream
+      .outputMode("append").format("parquet")
+      .option("path", out).option("checkpointLocation", chk)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    val killedAt = killAfter.map { n =>
+      val q = start()
+      while (q.isActive && committedBatches(q) < n) Thread.sleep(50)
+      val at = committedBatches(q)
+      if (q.isActive) q.stop()
+      q.awaitTermination()
+      at
+    }
+    // the (re)start that drains to completion — for the baseline this
+    // is the only start; for the killed run it resumes the checkpoint
+    start().awaitTermination()
+    val schema = frame().schema
+    (spark.read.schema(schema).parquet(out), killedAt)
   }
 
   def main(args: Array[String]): Unit = {
@@ -142,13 +140,14 @@ object RestartDrill {
       (pName, pClass) <- providers
       (qName, frame, stateParts) <- frames
     } yield {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", pClass)
+      val ps = GraftSession.fork(spark,
+        "spark.sql.streaming.stateStore.providerClass" -> pClass)
       val tag = s"$qName:$pName"
       val (baseDf, _) =
-        drain(spark, frame, new File(root, s"${tag}_base"), None, stateParts)
+        drain(ps, frame, new File(root, s"${tag}_base"), None, stateParts)
       val (b_n, b_h) = fingerprint(baseDf)
       val (resDf, killedAt) =
-        drain(spark, frame, new File(root, s"${tag}_kill"),
+        drain(ps, frame, new File(root, s"${tag}_kill"),
           Some(KillAfterBatches), stateParts)
       val (r_n, r_h) = fingerprint(resDf)
       val at = killedAt.getOrElse(-1L)

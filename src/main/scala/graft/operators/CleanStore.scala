@@ -190,17 +190,11 @@ object CleanStore {
         if (changed.nonEmpty) {
           // dynamic mode: only the partitions present in the written data
           // are replaced — untouched dates keep their existing files
-          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try {
-            built.withColumn(partCol, to_date(col(tsCol)))
-              .filter(col(partCol).cast("string").isin(changed.toSeq: _*))
-              .repartition(col(partCol))
-              .write.mode("overwrite").partitionBy(partCol).parquet(dir)
-          } finally prev match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
+          built.withColumn(partCol, to_date(col(tsCol)))
+            .filter(col(partCol).cast("string").isin(changed.toSeq: _*))
+            .repartition(col(partCol))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partCol).parquet(dir)
         }
         removed.foreach(d =>
           graft.sources.Staging.deleteRecursively(new java.io.File(dir, s"$partCol=$d")))

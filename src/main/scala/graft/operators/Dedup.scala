@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.functions._
 import graft.sources.Tables
 
@@ -728,19 +729,18 @@ object Dedup {
     // One shuffle partition per 100k directed edges, clamped to
     // [1, defaultParallelism] — a fact-scale pair graph saturates to the
     // session value and loses nothing. The count is one tiny job over the
-    // just-materialized checkpoint. Scoped conf flip, restored after the
-    // loop (the runToParquet pattern); the returned frame is planned by
-    // the CALLER's action after restore, so only round internals change —
+    // just-materialized checkpoint. The rounds run on a fork at that
+    // parallelism; the returned frame is rebound to the caller's session
+    // and planned by the caller's action, so only round internals change —
     // the fixpoint is partition-invariant and every consumer stays
     // hash-gated.
     val spark = pairs.sparkSession
     val nEdges = edges.count()
     val roundParts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, nEdges / 100000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", roundParts.toString)
-    try {
-    var labels = edges.select(col("src").as("id")).distinct()
+    val edgesF = GraftShim.rebind(edges, GraftSession.fork(spark,
+      "spark.sql.shuffle.partitions" -> roundParts.toString))
+    var labels = edgesF.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl")).persist()
     // releases the frame holding this round's cache/checkpoint blocks
     // (labels is a select OVER it from round 2 on — releasing the select
@@ -752,7 +752,7 @@ object Dedup {
     // one extra no-change round, hence <= (a diameter-maxIter chain
     // finishes changing on round maxIter and confirms on maxIter + 1)
     while (!converged && it <= maxIter) {
-      val nbrMin = edges.join(labels, col("src") === col("id"))
+      val nbrMin = edgesF.join(labels, col("src") === col("id"))
         .select(col("dst").as("id"), col("lbl"))
       // pointer doubling once the one-hop phase has overstayed its welcome:
       // adopt the label OF my label too (labels ⋈ labels on lbl = id)
@@ -808,9 +808,9 @@ object Dedup {
         (if (it > escalateAfter) " (pointer doubling engaged)" else ""))
     // the final labels stay persisted: the result's lineage is the whole
     // iteration and would otherwise recompute from round 0 at action time
-    labels.select(col("id").as("doc_id"), col("lbl").as("rep_id"))
+    GraftShim.rebind(labels, spark)
+      .select(col("id").as("doc_id"), col("lbl").as("rep_id"))
       .orderBy(col("doc_id"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   /** Canonical location of the persisted cluster-label artifact for a

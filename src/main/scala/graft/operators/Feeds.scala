@@ -49,8 +49,7 @@ object Feeds {
     * `outDir/<name>_json` (JSON lines) from explicit clean tables — the
     * Pipeline passes the tables it just staged, so the flow provably
     * serves from its own sink. The feeds are independent, so the six are
-    * written CONCURRENTLY ([[graft.Concurrently]]; their bodies set no
-    * session conf and swap no temp view). Each aggregate is still
+    * written CONCURRENTLY ([[graft.Concurrently]]). Each aggregate is still
     * computed ONCE: its parquet lands first, the JSON twin re-reads that
     * (tiny) file instead of re-running the scan-and-aggregate pipeline.
     * Returns after every feed has finished; the first failure is rethrown.

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.sources.Tables
 
 /** Iterative graph analytics beyond dd8's connected components: PageRank
@@ -99,21 +100,20 @@ object Graphs {
     // [1, defaultParallelism]; the edge count is one tiny job that also
     // materializes the edge cache (the extraction still runs exactly
     // once). The edge list and every derived loop frame are then LAID
-    // OUT at that parallelism (the caches must be built under the flip —
-    // a 32-partition cached frame re-imposes 32 map tasks on every
-    // iteration stage regardless of the shuffle conf). Scoped conf flip
-    // around the loop AND its materializing action (the dupClusters
-    // pattern); the scaled-integer fixpoint is partition-invariant, so
-    // q36 stays hash-gated.
+    // OUT at that parallelism (the caches must be built on the fork — a
+    // 32-partition cached frame re-imposes 32 map tasks on every
+    // iteration stage regardless of the shuffle conf). The loop AND its
+    // materializing action run on a fork at that parallelism; the
+    // scaled-integer fixpoint is partition-invariant, so q36 stays
+    // hash-gated.
     val edgesRaw = edges0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spark = edges0.sparkSession
     val nEdges = edgesRaw.count()
     val iterParts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, nEdges / 100000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", iterParts.toString)
-    val out = try {
-    val edges = edgesRaw.repartition(iterParts)
+    val edges = GraftShim.rebind(edgesRaw, GraftSession.fork(spark,
+      "spark.sql.shuffle.partitions" -> iterParts.toString))
+      .repartition(iterParts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = edges.select(col("src").as("v"))
       .union(edges.select(col("dst").as("v"))).distinct()
@@ -125,28 +125,26 @@ object Graphs {
     val n = nodes.count()
     val r0 = Scale / n
     val teleport = (15L * r0) / 100L
-      var rank = nodes.withColumn("r", lit(r0))
-      (1 to iterations).foreach { _ =>
-        val contrib = edges
-          .join(rank, col("src") === col("v"))
-          .join(deg, "src")
-          .select(col("dst"), expr("r div d").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        rank = nodes.join(contrib, col("v") === col("dst"), "left")
-          .select(col("v"),
-            (lit(teleport) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
-      }
-      // materialize the (node-scaled, bounded) rank vector under the
-      // graph-scale conf, then RELEASE the cached graph — without this the
-      // edge extraction stays pinned in executor storage for the rest of
-      // the session, shrinking the unified memory pool for every later
-      // query
-      val cp = rank.localCheckpoint(true)
-      edges.unpersist(); nodes.unpersist(); deg.unpersist()
-      cp
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    var rank = nodes.withColumn("r", lit(r0))
+    (1 to iterations).foreach { _ =>
+      val contrib = edges
+        .join(rank, col("src") === col("v"))
+        .join(deg, "src")
+        .select(col("dst"), expr("r div d").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+      rank = nodes.join(contrib, col("v") === col("dst"), "left")
+        .select(col("v"),
+          (lit(teleport) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
+    }
+    // materialize the (node-scaled, bounded) rank vector under the
+    // graph-scale conf, then RELEASE the cached graph — without this the
+    // edge extraction stays pinned in executor storage for the rest of
+    // the session, shrinking the unified memory pool for every later
+    // query
+    val cp = rank.localCheckpoint(true)
+    edges.unpersist(); nodes.unpersist(); deg.unpersist()
     edgesRaw.unpersist()
-    out
+    GraftShim.rebind(cp, spark)
   }
 
   def q36PageRank(spark: SparkSession, sfDir: String): DataFrame =

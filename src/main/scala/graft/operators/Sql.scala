@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.sources.Tables
 
 /** S5/P7 — the SQL entry point. The reference's analytics ARE five SQL
@@ -21,21 +22,19 @@ import graft.sources.Tables
   */
 object Sql {
 
-  // Weak session keys — identity-hash strings would collide after GC
-  // reuse and keep dead sessions' entries forever.
-  private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-
-  /** Register every corpus table as a temp view (the Spark twin of the
-    * reference's Arrow `con.register`). Lazy — no jobs run — but each
-    * registration re-reads parquet footers for the schema, so it is skipped
-    * when this session already has views for this scale dir.
-    *
+  /** The session every corpus table is registered on as a temp view (the
+    * Spark twin of the reference's Arrow `con.register`): a fork of `spark`
+    * per scale dir, so the caller's own catalog never changes. Lazy — no
+    * jobs run — and done once per fork, since each registration re-reads
+    * parquet footers for the schema. `multiLineitem` binds `lineitem` to
+    * [[Tables.lineitemMulti]], on a fork of its own.
     */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    if (registered.get(spark) != sfDir) {
-      Tables.all.foreach(n => Tables(spark, sfDir, n).createOrReplaceTempView(n))
-      registered.put(spark, sfDir)
+  def registerViews(spark: SparkSession, sfDir: String,
+      multiLineitem: Boolean = false): SparkSession =
+    GraftSession.forkFor(spark, s"sql:$sfDir:multi=$multiLineitem", Map.empty) { s =>
+      Tables.all.foreach(n =>
+        (if (n == "lineitem" && multiLineitem) Tables.lineitemMulti(s, sfDir)
+         else Tables(s, sfDir, n)).createOrReplaceTempView(n))
     }
 
   private val weekdayCase =
@@ -200,22 +199,14 @@ object Sql {
     * 0.223 → 0.277 unchanged-control drift in the same windows —
     * bench/r20_sqlmulti{,2}.json; per-task broadcast-probe setup
     * dominates 32 micro-splits at this scale, the same adjudication
-    * that kept q05/q09 raw in r19). The swap is ANALYSIS-TIME: `sql()`
-    * resolves the temp view eagerly, so the returned frame stays bound
-    * to the multi layout while the raw view is restored immediately —
-    * queries run strictly sequentially per session (the documented
-    * conf-flip invariant), so nothing plans inside the window.
+    * that kept q05/q09 raw in r19). sql9 therefore runs on its own views
+    * fork, where `lineitem` is the multi-file copy. Every query's frame is
+    * rebound to the caller's session, which plans and runs it.
     */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     sparkSql.map { case (name, text) =>
-      name -> ((s: SparkSession, d: String) => {
-        registerViews(s, d)
-        if (name == "sql9_grouping_sets") {
-          Tables.lineitemMulti(s, d).createOrReplaceTempView("lineitem")
-          try s.sql(text)
-          finally Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-        } else s.sql(text)
-      })
+      name -> ((s: SparkSession, d: String) =>
+        GraftShim.rebind(registerViews(s, d, name == "sql9_grouping_sets").sql(text), s))
     }
 
   /** DuckDB oracles: identical result contracts to the q05–q09 DataFrame

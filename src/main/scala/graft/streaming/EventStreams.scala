@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.GraftSession
 import graft.functions._
 import graft.sources.Tables
 
@@ -243,6 +244,12 @@ object EventStreams {
     adaptiveStatePartitions(sfDir, table, GateStatePartitions, GateTargetBytes,
       pinned = sys.env.contains("SPARK_GRAFT_GATE_PARTITIONS"))
 
+  /** The session a foreachBatch gate over `events` starts its stream on:
+    * a fork at [[gateParts]] state partitions.
+    */
+  def gateFork(spark: SparkSession, sfDir: String): SparkSession =
+    GraftSession.fork(spark, "spark.sql.shuffle.partitions" -> gateParts(sfDir).toString)
+
   /** Stream-stream join gates: floor [[JoinGateStatePartitions]]. */
   def joinGateParts(sfDir: String): Int =
     adaptiveStatePartitions(sfDir, "events", JoinGateStatePartitions,
@@ -257,23 +264,19 @@ object EventStreams {
     val base = stagingDir(name)
     val out = new java.io.File(base, "out").getAbsolutePath
     val chk = new java.io.File(base, "chk").getAbsolutePath
-    // scoped conf flip: the streaming query captures shuffle.partitions at
-    // START (and pins it in the checkpoint); restore the session value for
-    // whatever batch work follows. Gate runs are sequential per session,
-    // so the flip races nothing.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val writer = df.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // the streaming query captures shuffle.partitions at START (and pins
+    // it in the checkpoint), so it starts on a fork at the state count
+    val writer = GraftShim.rebind(df, GraftSession.fork(spark,
+      "spark.sql.shuffle.partitions" -> statePartitions.toString))
+      .writeStream
+      .outputMode("append")
+      .format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", chk)
+      .trigger(Trigger.AvailableNow())
+    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+      .start()
+      .awaitTermination()
     // explicit schema: a run whose final watermark closes nothing writes
     // zero files, and schema inference over an empty sink dir would throw
     spark.read.schema(df.schema).parquet(out)
@@ -656,9 +659,7 @@ object EventStreams {
     val stateF = new java.io.File(base, "sketch")
     val chk = new java.io.File(base, "chk").getAbsolutePath
     val mg = udaf(new MisraGries(k), org.apache.spark.sql.Encoders.STRING)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", gateParts(sfDir).toString)
-    try eventStream(spark, sfDir)
+    eventStream(gateFork(spark, sfDir), sfDir)
       .writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
         // key completeness (the st13 posture): a heavy-hitters report
@@ -674,7 +675,6 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     val (_, fin) = readSketch(stateF)
     import spark.implicits._
     fin.toSeq.toDF("user_id", "est_count")

@@ -184,16 +184,11 @@ object MaterializedView {
             .getOrElse(spark.createDataFrame(
               new java.util.ArrayList[org.apache.spark.sql.Row](), fullSchema))
           val merged = merge(existing)
-          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try merged
+          merged
             .repartition(col(partCol))
-            .write.mode("overwrite").partitionBy(partCol)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partCol)
             .parquet(dataDir.getAbsolutePath)
-          finally prev match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
           // COMMIT: one atomic state flip, then post-commit cleanup
           writeState(root, s"applied $batchId")
           baks.foreach { case (_, bak) => graft.sources.Staging.deleteRecursively(bak) }
@@ -327,15 +322,12 @@ object MaterializedView {
     val base = EventStreams.stagingDir("st13_latest")
     val serve = new File(base, "serve").getAbsolutePath
     val chk = new File(base, "chk").getAbsolutePath
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      EventStreams.gateParts(sfDir).toString)
     // KEY COMPLETENESS at the door: a latest-per-key snapshot cannot
     // attribute a NULL-keyed record (the bucket router and the state key
     // both need the id; the adversarial-events replay killed the stream
     // with ROW_VALUE_IS_NULL on one NULL user_id). Screened identically
     // in the oracle text — the st7 typed-gate posture.
-    try EventStreams.eventStream(spark, sfDir)
+    EventStreams.eventStream(EventStreams.gateFork(spark, sfDir), sfDir)
       .filter(col("user_id").isNotNull)
       .writeStream
       .foreachBatch((b: DataFrame, id: Long) => upsertLatest(b, serve, id))
@@ -343,7 +335,6 @@ object MaterializedView {
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     readLatest(spark, serve)
   }
 
@@ -364,17 +355,13 @@ object MaterializedView {
     val base = EventStreams.stagingDir("st9_mv")
     val serve = new File(base, "serve").getAbsolutePath
     val chk = new File(base, "chk").getAbsolutePath
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      EventStreams.gateParts(sfDir).toString)
-    try EventStreams.eventStream(spark, sfDir)
+    EventStreams.eventStream(EventStreams.gateFork(spark, sfDir), sfDir)
       .writeStream
       .foreachBatch((b: DataFrame, id: Long) => upsertBatch(b, serve, id))
       .option("checkpointLocation", chk)
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     readServing(spark, serve)
   }
 

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * within-watermark dedup, stream-stream inner + left-outer interval joins,
   * flatMapGroupsWithState sessionization, chained dedup→agg) runs twice —
   * default provider, then RocksDB — and must produce byte-identical rows.
-  * The provider is a runtime SQL conf read at query start, and each gate
+  * The provider is a runtime SQL conf read at query start (set on a fork
+  * of the suite session for the RocksDB run), and each gate
   * run wipes its own sink + checkpoint (EventStreams.stagingDir), so the
   * second run is a genuine re-execution, not a checkpoint replay.
   *
@@ -40,15 +41,8 @@ class RocksDbFamilySpec extends AnyFunSuite with SparkFixture {
       val q = SparkEntry.queries(name)
       val default = q(spark, sf001).collect().toSeq
       assert(default.nonEmpty, s"$name emitted nothing — parity untested")
-      val prev = spark.conf.getOption(confKey)
-      spark.conf.set(confKey, rocksProvider)
-      try {
-        val rocks = q(spark, sf001).collect().toSeq
-        assert(rocks === default)
-      } finally prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None    => spark.conf.unset(confKey)
-      }
+      val rocks = q(GraftSession.fork(spark, confKey -> rocksProvider), sf001).collect().toSeq
+      assert(rocks === default)
     }
   }
 }

@@ -113,24 +113,15 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // runtime SQL conf, so semantic parity is provable in-suite: run the
     // two heaviest state shapes (dropDuplicatesWithinWatermark keyed
     // dedup, stream-stream interval join) under RocksDB and require
-    // byte-identical results. GraftSession wires the same provider behind
-    // SPARK_GRAFT_ROCKSDB_STATE=1 for the mains.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
+    // byte-identical results. The mains reach the same provider through
+    // SPARK_GRAFT_CONF=spark.sql.streaming.stateStore.providerClass=….
+    val rocks = GraftSession.fork(spark, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val dedup = EventStreams.st5StreamDedup(spark, sf001).collect().toSeq
-      assert(dedup === EventStreams.dedupBatch(Tables.events(spark, sf001)).collect().toSeq)
-      val attr = EventStreams.st6StreamAttribution(spark, sf001).collect().toSeq
-      assert(attr === EventStreams.attributionBatch(Tables.events(spark, sf001)).collect().toSeq)
-      assert(attr.nonEmpty && dedup.nonEmpty)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+    val dedup = EventStreams.st5StreamDedup(rocks, sf001).collect().toSeq
+    assert(dedup === EventStreams.dedupBatch(Tables.events(spark, sf001)).collect().toSeq)
+    val attr = EventStreams.st6StreamAttribution(rocks, sf001).collect().toSeq
+    assert(attr === EventStreams.attributionBatch(Tables.events(spark, sf001)).collect().toSeq)
+    assert(attr.nonEmpty && dedup.nonEmpty)
   }
 
   test("st5: streaming dedup (dropDuplicatesWithinWatermark) == batch distinct, and actually drops rows") {

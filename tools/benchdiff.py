@@ -128,11 +128,14 @@ def tuning(rec):
     return t if isinstance(t, dict) else None
 
 
+# Compared key by key, an absent key reading as unset: a knob added to
+# or dropped from the stamp between records is not a tuning difference
+# unless it was set.
 ot, nt = tuning(old_rec), tuning(new_rec)
-tuning_differs = ot is not None and nt is not None and ot != nt
+diffs = [] if ot is None or nt is None else [
+    k for k in sorted(set(ot) | set(nt)) if ot.get(k, "") != nt.get(k, "")]
+tuning_differs = bool(diffs)
 if tuning_differs:
-    diffs = sorted(set(list(ot) + list(nt)))
-    diffs = [k for k in diffs if ot.get(k, "") != nt.get(k, "")]
     print("=" * 66)
     print("!! TUNING DIFFERS: " + "; ".join(
         f"{k} {ot.get(k, '') or '<unset>'!r} -> {nt.get(k, '') or '<unset>'!r}"

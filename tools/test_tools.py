@@ -143,6 +143,11 @@ code, out = run_benchdiff(rt_old, rec({"q1": (2.0, "aaa"), "q2": (2.0, "bbb")},
                                       tuning=T0))
 check("identical tuning keeps TIME lines",
       code == 0 and "TIME  q1" in out and "TUNING DIFFERS" not in out, out)
+code, out = run_benchdiff(rt_old, rec({"q1": (2.0, "aaa"), "q2": (2.0, "bbb")},
+                                      tuning={"SPARK_GRAFT_CONF": "",
+                                              "SPARK_GRAFT_MAX_PAIR_BUDGET": ""}))
+check("a knob added or dropped while unset is not a tuning difference",
+      code == 0 and "TIME  q1" in out and "TUNING DIFFERS" not in out, out)
 code, out = run_benchdiff(rt_old, rec({"q1": (2.0, "aaa"), "q2": (2.0, "bbb")}))
 check("one-sided tuning prints unguarded note, keeps TIME",
       "unguarded by the tuning-provenance check" in out and "TIME  q1" in out, out)
