@@ -136,7 +136,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * Since r19 a BEST-OF-HISTORY gate closes the remaining hole (the
   * fs/page-cache "slow window" — foreign_load ≈ 0, canaries clean, yet
   * the take reads 1.5× a same-code clean window): each query's best
-  * warm per (sf dir, plan fingerprint) is kept in a committed TSV
+  * warm per (sf dir, cpus, plan fingerprint) is kept in a committed TSV
   * (`bench/best_history.tsv`, SPARK_GRAFT_BENCH_HISTORY, monotone-min);
   * a warm run > SPARK_GRAFT_BENCH_SLOWK (default 1.5) × that best on an
   * IDENTICAL fingerprint drains, clears cache, re-runs once, keeps the
@@ -351,7 +351,8 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(2)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/last_run.json")
     val planDir = sys.env.get("SPARK_GRAFT_BENCH_PLAN_DIR").filter(_.nonEmpty)
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.build(cpus)
     val registry = SparkEntry.benchQueries
     val unknown = args.filterNot(registry.contains)
     if (unknown.nonEmpty) {
@@ -475,9 +476,10 @@ object Bench {
     // "slow_window":true and lands in the root `slow_window` array, and
     // benchdiff suppresses exactly those TIME lines — the same
     // self-demotion contract as the contention gate. History lives in a
-    // committed TSV (query <tab> sfDir <tab> plan_fp <tab> best_warm),
-    // monotone-min per (query, sf, fingerprint): any clean take only
-    // lowers it, a fingerprint change resets it, so the reference is
+    // committed TSV ([[BestHistory]]: query, sf dir, cpus, plan_fp,
+    // best_warm), monotone-min per (query, sf, cpus, fingerprint), so a
+    // take at one core count is never judged against another's. Any
+    // clean take only lowers it, a fingerprint change resets it, so the reference is
     // always "the best this exact plan has ever done on this data" —
     // an inflated take can never raise the bar on itself. The original
     // cold is always kept (the retry's "cold" reads a page cache the
@@ -486,20 +488,15 @@ object Bench {
     val slowK = sys.env.getOrElse("SPARK_GRAFT_BENCH_SLOWK", "1.5").toDouble
     val historyPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "bench/best_history.tsv")
-    val bestHistory: Map[String, (String, Double)] =
-      if (historyPath.isEmpty) Map.empty
+    val historyLines: Seq[String] = {
+      val p = java.nio.file.Paths.get(historyPath)
+      if (historyPath.isEmpty || !java.nio.file.Files.exists(p)) Seq.empty
       else {
-        val p = java.nio.file.Paths.get(historyPath)
-        if (!java.nio.file.Files.exists(p)) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.readAllLines(p).asScala.iterator
-            .map(_.split("\t"))
-            .collect { case Array(q, sf, fp, w) if sf == sfDir =>
-              q -> (fp, w.toDouble)
-            }.toMap
-        }
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.readAllLines(p).asScala.toSeq
       }
+    }
+    val bestHistory = BestHistory.parse(historyLines, sfDir, cpus)
     case class QRun(cold: Either[String, Double],
         warm: Either[String, (Double, SparkPlan)], gcSec: Double, load: Double)
     def runQuery(name: String, fn: (SparkSession, String) => DataFrame): QRun = {
@@ -630,20 +627,12 @@ object Bench {
           s"recorded plan-identical best after a drained re-run — " +
           slowWindow.mkString(", ") +
           " — stamped \"slow_window\":true and self-demoted in benchdiff")
-    // history update: monotone min per (query, sf, fingerprint); a
+    // history update: monotone min per (query, sf, cpus, fingerprint); a
     // fingerprint change RESETS the entry (new plan = new reference).
-    // Entries for other sf dirs pass through untouched.
+    // Rows of another sf dir or core count pass through untouched.
     if (historyPath.nonEmpty) {
       val p = java.nio.file.Paths.get(historyPath)
       import scala.jdk.CollectionConverters._
-      val otherSf: Seq[String] =
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.readAllLines(p).asScala.toSeq
-            .filter(l => l.split("\t") match {
-              case Array(_, sf, _, _) => sf != sfDir
-              case _                  => false
-            })
-        else Seq.empty
       val mine: Map[String, (String, Double)] = ok.map { q =>
         val kept = bestHistory.get(q.k) match {
           case Some((bfp, bw)) if bfp == q.fp && bw <= q.warm => (bfp, bw)
@@ -651,12 +640,9 @@ object Bench {
         }
         q.k -> kept
       }.toMap
-      val carried = bestHistory.view.filterKeys(k => !mine.contains(k)).toMap
-      val lines = (mine ++ carried).toSeq.sortBy(_._1).map { case (k, (fp, w)) =>
-        s"$k\t$sfDir\t$fp\t$w"
-      } ++ otherSf
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(p, lines.sorted.asJava)
+      java.nio.file.Files.write(p,
+        BestHistory.render(historyLines, sfDir, cpus, bestHistory ++ mine).asJava)
     }
     if (contendedMidRun.nonEmpty)
       System.err.println(
@@ -761,5 +747,33 @@ object Bench {
         s""""staging_sec":$stagingSec,"staging_rebuilds":$stagingRebuilds,""" +
         s""""take_id":"$takeId","record":"$outPath"}""")
     spark.stop()
+  }
+}
+
+/** `bench/best_history.tsv`: one row per (query, sf dir, cpus) —
+  * `query <tab> sfDir <tab> cpus <tab> plan_fp <tab> best_warm`. A row
+  * of the older four-column form (no cpus) is never compared against and
+  * is kept in the file as it is.
+  */
+object BestHistory {
+
+  /** The best warm and its fingerprint per query, for one sf dir and
+    * core count.
+    */
+  def parse(lines: Seq[String], sfDir: String, cpus: String): Map[String, (String, Double)] =
+    lines.map(_.split("\t")).collect {
+      case Array(q, sf, c, fp, w) if sf == sfDir && c == cpus => q -> ((fp, w.toDouble))
+    }.toMap
+
+  /** The file after a take at (sfDir, cpus): `best` replaces that key's
+    * rows, every other row passes through. Sorted, so the file diffs well.
+    */
+  def render(lines: Seq[String], sfDir: String, cpus: String,
+      best: Map[String, (String, Double)]): Seq[String] = {
+    val others = lines.filter(l => l.nonEmpty && (l.split("\t") match {
+      case Array(_, sf, c, _, _) => sf != sfDir || c != cpus
+      case _ => true
+    }))
+    (best.toSeq.map { case (q, (fp, w)) => s"$q\t$sfDir\t$cpus\t$fp\t$w" } ++ others).sorted
   }
 }

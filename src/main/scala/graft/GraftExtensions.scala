@@ -8,7 +8,10 @@ import graft.functions.{BpeSymCount, JsonFirstLong, DotProduct, ImageHeader, Mat
 
 /** Session extensions registering graft's native Catalyst expressions so
   * they are callable from SQL and `expr(...)` — the public
-  * `SparkSessionExtensions` route (no sessionState internals). Enable with
+  * `SparkSessionExtensions` route (no sessionState internals) — and the
+  * two plan rules that take a repeated dashboard interaction's fixed cost
+  * away: [[BindFilterConstants]] (query-stage preparation) and
+  * [[SortSmallStageLocally]] (AQE runtime optimizer). Enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -34,6 +37,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectQueryStagePrepRule(_ => BindFilterConstants)
+    ext.injectRuntimeOptimizerRule(_ => SortSmallStageLocally)
     ext.injectFunction((
       FunctionIdentifier("simhash60"),
       new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),

@@ -1,0 +1,143 @@
+package graft
+
+import scala.annotation.tailrec
+import scala.collection.immutable.HashSet
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, In, LeafExpression, Literal, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalLimit, LogicalPlan, Offset, Project, Repartition, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+
+/** A literal whose value reaches generated code through the `references`
+  * array and is read once into a field, instead of being written into the
+  * code as a Java literal. Two filters that differ only in such constants
+  * generate the same code, so the second reuses the first's compiled
+  * class. Prints exactly like the literal it replaces.
+  */
+case class BoundConstant(lit: Literal) extends LeafExpression {
+  override def dataType: DataType = lit.dataType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = lit.value
+  override def toString: String = lit.toString
+  override def sql: String = lit.sql
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("constant", lit.value, CodeGenerator.boxedType(dataType))
+    val field = ctx.addMutableState(javaType, "constant", v => s"$v = $ref.${javaType}Value();")
+    ExprCode.forNonNullValue(JavaCode.global(field, dataType))
+  }
+}
+
+/** `child IN (list)` over non-null string literals, evaluated as one probe
+  * of a `HashSet` passed through `references`. The generated code names
+  * only the set's class, never its size or elements, so every list length
+  * shares one compiled shape. Prints exactly like the `In` it replaces.
+  */
+case class BoundStringIn(child: Expression, list: Seq[Literal])
+    extends UnaryExpression with Predicate {
+  @transient private lazy val set: HashSet[Any] = HashSet.from(list.map(_.value))
+
+  override def nullable: Boolean = child.nullable
+  override def toString: String = In(child, list).toString
+  override def sql: String = In(child, list).sql
+
+  override protected def nullSafeEval(input: Any): Any = set.contains(input)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val setTerm = ctx.addReferenceObj("set", set, classOf[HashSet[_]].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $setTerm.contains($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BoundStringIn =
+    copy(child = newChild)
+}
+
+/** Query-stage preparation rule: in every `FilterExec` condition, bind the
+  * primitive constants that are comparison operands ([[BoundConstant]])
+  * and turn a string `IN` list into one [[BoundStringIn]]. A dashboard
+  * interaction that only moves its widget bounds then compiles nothing
+  * new. Literals elsewhere in a condition stay literals: some expressions
+  * read theirs at plan time (a rounding scale, a seed). The scan's pushed
+  * filters and partition filters are separate expressions and stay as
+  * they are.
+  */
+object BindFilterConstants extends Rule[SparkPlan] {
+
+  private def bindable(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+         DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  private def bind(e: Expression): Expression = e match {
+    case l @ Literal(v, t) if v != null && bindable(t) => BoundConstant(l)
+    case other => other
+  }
+
+  private def isStringLiteral(e: Expression): Boolean = e match {
+    case Literal(v, StringType) => v != null
+    case _ => false
+  }
+
+  private def bindCondition(condition: Expression): Expression = condition.transformUp {
+    case c: BinaryComparison if c.children.exists(_.isInstanceOf[Literal]) =>
+      c.withNewChildren(c.children.map(bind))
+    case In(v, list) if list.size > 1 && v.dataType == StringType &&
+        list.forall(isStringLiteral) =>
+      BoundStringIn(v, list.map(_.asInstanceOf[Literal]))
+  }
+
+  override def apply(plan: SparkPlan): SparkPlan = plan.transform {
+    case f: FilterExec =>
+      val bound = bindCondition(f.condition)
+      if (bound.fastEquals(f.condition)) f else f.copy(condition = bound)
+  }
+}
+
+/** AQE runtime optimizer rule: a global `Sort` whose input (through
+  * Project/Filter only) is a materialized query stage no larger than what
+  * AQE would coalesce into one partition anyway sorts that one partition
+  * locally. The range exchange it replaces costs a sampling job and a
+  * shuffle job for a result of a few hundred rows. The limit is
+  * `coalescePartitions.minPartitionSize` under `parallelismFirst`, else
+  * `advisoryPartitionSizeInBytes`. Left alone: a sort under a limit (it
+  * plans as a top-k, with no range exchange) and a sort over a stage that
+  * already is its range exchange (that job has run).
+  */
+object SortSmallStageLocally extends Rule[LogicalPlan] {
+
+  @tailrec private def stageBelow(p: LogicalPlan): Option[LogicalQueryStage] = p match {
+    case s: LogicalQueryStage => Some(s)
+    case Project(_, child) => stageBelow(child)
+    case Filter(_, child) => stageBelow(child)
+    case _ => None
+  }
+
+  private def onePartitionLimit: Long =
+    if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED)) plan else rewrite(plan, limited = false)
+
+  /** `limited`: the node is the input of a limit (through Project/Offset),
+    * so a sort here plans as a top-k with no range exchange to drop.
+    */
+  private def rewrite(p: LogicalPlan, limited: Boolean): LogicalPlan = p match {
+    case s @ Sort(order, true, child, _) if !limited && stageBelow(child).exists(st =>
+        st.isMaterialized && st.stats.sizeInBytes <= onePartitionLimit &&
+          !st.physicalPlan.outputPartitioning.satisfies(OrderedDistribution(order))) =>
+      s.copy(global = false, child = Repartition(1, shuffle = false, child))
+    case _: LocalLimit => p.withNewChildren(p.children.map(rewrite(_, limited = true)))
+    case _: Project | _: Offset => p.withNewChildren(p.children.map(rewrite(_, limited)))
+    case _ => p.withNewChildren(p.children.map(rewrite(_, limited = false)))
+  }
+}

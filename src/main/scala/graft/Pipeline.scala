@@ -56,8 +56,8 @@ object Pipeline {
     //    (or failed) before anything below reads them.
     val cleanPath = s"$outDir/clean_lineitem"
     val cleanEventsPath = s"$outDir/clean_events"
-    val eventsSink = Concurrently.fork(Seq(() =>
-      CleanStore.writeEvents(CleanStore.cleanEvents(spark, sfDir), cleanEventsPath)))
+    val events = CleanStore.cleanEvents(spark, sfDir)
+    val eventsSink = Concurrently.fork(Seq(() => CleanStore.writeEvents(events, cleanEventsPath)))
     try CleanStore.writeLineitem(derived, cleanPath)
     catch { case e: Throwable => eventsSink.await().foreach(e.addSuppressed); throw e }
     eventsSink.join()
@@ -66,11 +66,14 @@ object Pipeline {
     // 4. chart feeds from the SAME operator bodies, served by RE-READING
     //    the tables just staged (app.py:97's pattern) — the feed scans hit
     //    the partitioned clean layer, never the raw corpus again; the six
-    //    feeds are written concurrently
+    //    feeds are written concurrently. Both are read with the schema
+    //    they were written with, so no read runs a schema-inference job.
     val feedDir = s"$outDir/feeds"
     Feeds.writeAll(spark, sfDir, feedDir,
       Feeds.Served(
-        spark.read.parquet(cleanPath), spark.read.parquet(cleanEventsPath)))
+        spark.read.schema(CleanStore.servedSchema(derived.schema, "ship_date")).parquet(cleanPath),
+        spark.read.schema(CleanStore.servedSchema(events.schema, "event_date"))
+          .parquet(cleanEventsPath)))
     Result(cleanPath, counts, feedDir)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructField, StructType}
 import graft.sources.Tables
 
 /** The materialized CLEAN serving layer — the reference's
@@ -77,6 +78,14 @@ object CleanStore {
 
   def writeLineitem(df: DataFrame, path: String): Unit =
     writePartitioned(df, "l_shipdate", "ship_date", path)
+
+  /** The schema to read a [[writePartitioned]] table back with: the
+    * written frame's columns (file sources read every column as nullable)
+    * plus the date partition column. Spark infers the same schema, but
+    * inferring it costs a job per read.
+    */
+  def servedSchema(written: StructType, partCol: String): StructType =
+    written.add(StructField(partCol, DateType))
 
   // ---------------------------------------------------- canonical store
 
@@ -177,7 +186,8 @@ object CleanStore {
         // column set/order is pinned to the build's so a later
         // source-side diff compares like with like
         writeFingerprints(fpFile,
-          fingerprintAgg(spark.read.parquet(dir), col(partCol), built.columns.toSeq))
+          fingerprintAgg(spark.read.schema(servedSchema(built.schema, partCol)).parquet(dir),
+            col(partCol), built.columns.toSeq))
         java.nio.file.Files.write(specFile.toPath, spec.getBytes)
         java.nio.file.Files.write(srcStampFile.toPath, srcStamp.getBytes)
       } else if (!srcStampFile.exists() ||
@@ -204,7 +214,7 @@ object CleanStore {
         java.nio.file.Files.write(srcStampFile.toPath, srcStamp.getBytes)
         if (!marker.exists()) { java.nio.file.Files.createFile(marker.toPath); () }
       }
-      spark.read.parquet(dir)
+      spark.read.schema(servedSchema(built.schema, partCol)).parquet(dir)
     }
   }
 

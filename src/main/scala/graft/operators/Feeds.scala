@@ -51,7 +51,8 @@ object Feeds {
     * serves from its own sink. The feeds are independent, so the six are
     * written CONCURRENTLY ([[graft.Concurrently]]). Each aggregate is still
     * computed ONCE: its parquet lands first, the JSON twin re-reads that
-    * (tiny) file instead of re-running the scan-and-aggregate pipeline.
+    * (tiny) file, with the schema it was written with, instead of
+    * re-running the scan-and-aggregate pipeline.
     * Returns after every feed has finished; the first failure is rethrown.
     */
   def writeAll(spark: SparkSession, sfDir: String, outDir: String, served: Served): Unit = {
@@ -60,7 +61,8 @@ object Feeds {
     graft.Concurrently.fork(fs.toSeq.map { case (name, df) =>
       () => {
         writeFeed(df, s"$outDir/$name")
-        writeFeed(spark.read.parquet(s"$outDir/$name"), s"$outDir/${name}_json", "json")
+        writeFeed(spark.read.schema(df.schema).parquet(s"$outDir/$name"),
+          s"$outDir/${name}_json", "json")
       }
     }).join()
   }
