@@ -45,6 +45,21 @@ object GraftSession {
       // PartitionFilters changes. Untruncated metadata makes the scrub
       // purely structural. Display-only conf: no plan/behavior change.
       .config("spark.sql.maxMetadataStringLength", "100000")
+      // Generated classes are cached per (context class loader, source).
+      // With artifact isolation every session, fork and stream run (a
+      // streaming query runs on its own clone) gets a class loader of its
+      // own, so the same source compiled again on each: st9 compiled 17
+      // classes on every run. The engine adds no session artifacts (jars,
+      // class files), so all sessions share the application loader.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // Room for every generated class the registry makes: one graft.Bench
+      // take of the 202 queries at sf0.01 leaves 2,364 distinct keys, 2,514
+      // when it also builds the staged fixtures (a source compiles once
+      // under the driver's loader and once under the task threads'). The
+      // default 100 held less than one pass of the six-query benchmark
+      // slice, so each warm pass recompiled ~193 classes. A cached class
+      // stays loaded: the full take ends with 15 MB more Metaspace.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
     // SPARK_GRAFT_CONF: semicolon-separated k=v pairs applied last — the
     // measurement-time tuning surface (e.g. state-store provider or
     // changelog-checkpointing experiments inside a bench take, r16

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 /** Dev measurement tool (guide §1): decompose a registry query's wall time
@@ -7,9 +8,11 @@ import org.apache.spark.scheduler._
   * tasks it schedules — the fixed-overhead signal the bench totals hide.
   * `runMain graft.Profile <query> [query ...]` (env: SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_CPUS, SPARK_GRAFT_PROFILE_RUNS default 3). Reports per run:
-  * build (fn() return), exec (toRdd.count), jobs, stages, tasks, and the
+  * build (fn() return), exec (toRdd.count), jobs, stages, tasks, the
   * summed executor task time — so (wall − task_time/cores) exposes
-  * scheduling/driver overhead. Not on any driver path.
+  * scheduling/driver overhead — and the classes codegen compiled (a warm
+  * run that compiles missed the generated-class cache). Not on any
+  * driver path.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -62,15 +65,17 @@ object Profile {
       (0 until runs).foreach { i =>
         Thread.sleep(200) // let the async listener bus drain
         jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0L
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
         df.queryExecution.toRdd.count()
         val t2 = System.nanoTime()
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
         Thread.sleep(200) // drain before reading counters
         println(f"[profile] $name run$i build ${(t1 - t0) / 1e9}%.3fs " +
           f"exec ${(t2 - t1) / 1e9}%.3fs jobs $jobs%d stages $stages%d " +
-          f"tasks $tasks%d task_time ${taskTimeMs / 1e3}%.2fs")
+          f"tasks $tasks%d task_time ${taskTimeMs / 1e3}%.2fs compiles $compiled%d")
         if (stageDetail) {
           import scala.jdk.CollectionConverters._
           stageRows.asScala.toSeq.sortBy(-_._3).take(15).foreach {

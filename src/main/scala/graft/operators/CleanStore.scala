@@ -243,7 +243,8 @@ object CleanStore {
     val built = cleanEvents(spark, sfDir)
     val spec = graft.sources.Staging.planSpec(built) + "\n" +
       graft.sources.Staging.sourceStamp(Seq(source))
-    graft.sources.ManifestStore.serve(spark, root, spec)(writeEvents(built, _))
+    graft.sources.ManifestStore.serve(spark, root, spec,
+      servedSchema(built.schema, "event_date"))(writeEvents(built, _))
   }
 
   /** The clean derived lineitem table, materialized once per scale dir. */
@@ -409,7 +410,7 @@ object CleanStore {
     val spec = graft.sources.Staging.planSpec(built) +
       s"\nzorder-v4 files=$ZOrderFiles bits=$ZOrderBits ts=micros norm=equidepth\n" +
       graft.sources.Staging.sourceStamp(Seq(source))
-    graft.sources.ManifestStore.serve(spark, root, spec,
+    graft.sources.ManifestStore.serve(spark, root, spec, built.schema,
       graft.sources.ManifestStore.IndexReaderGraceMs)(writeZOrdered(built, _))
   }
 }

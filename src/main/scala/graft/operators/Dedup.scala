@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.GraftSession
 import graft.functions._
 import graft.sources.Tables
@@ -852,8 +853,11 @@ object Dedup {
     val spec = "min-label-cc-v1\n" + graft.sources.Staging.planSpec(pairs) +
       "\n" + graft.sources.Staging.sourceStamp(
         Seq(new java.io.File(Tables.path(sfDir, "documents"))))
+    // dupClusters' (doc_id, rep_id), both of the pairs' doc id type
+    val id = pairs.schema("doc_a").dataType
     graft.sources.ManifestStore.serve(spark,
-      new java.io.File(clusterLabelsPath(sfDir, n, threshold, maxDf, upTo)), spec)(
+      new java.io.File(clusterLabelsPath(sfDir, n, threshold, maxDf, upTo)), spec,
+      StructType(Seq(StructField("doc_id", id), StructField("rep_id", id))))(
       dupClusters(pairs).write.parquet(_))
   }
 

@@ -72,12 +72,12 @@ object Graphs {
     // immutable snapshot and swaps — an iterative consumer (PageRank,
     // triangles) whose loop is mid-flight keeps reading the generation it
     // started on instead of aborting on deleted files
-    val spec = graft.sources.Staging.planSpec(nationEdges(spark, sfDir)) +
+    val edges = nationEdges(spark, sfDir)
+    val spec = graft.sources.Staging.planSpec(edges) +
       "\n" + graft.sources.Staging.sourceStamp(sources)
-    graft.sources.ManifestStore.serve(spark, new java.io.File(path), spec,
+    graft.sources.ManifestStore.serve(spark, new java.io.File(path), spec, edges.schema,
       graft.sources.ManifestStore.IndexReaderGraceMs)(
-      snapPath => nationEdges(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(snapPath))
+      snapPath => edges.coalesce(1).write.mode("overwrite").parquet(snapPath))
   }
 
   /** Scaled-integer PageRank over an edge list; returns (v, rank).

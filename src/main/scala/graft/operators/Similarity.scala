@@ -153,7 +153,7 @@ object Similarity {
     // whole vector family, so a restage racing an in-flight probe scan is
     // the family's most likely abort — a probe pinned to the previous
     // snapshot now completes instead (ServeUnderRefreshSpec's index soak)
-    graft.sources.ManifestStore.serve(spark, new java.io.File(dir), spec,
+    graft.sources.ManifestStore.serve(spark, new java.io.File(dir), spec, built.schema,
       graft.sources.ManifestStore.IndexReaderGraceMs)(
       p => built.repartition(spark.sparkContext.defaultParallelism)
         .write.mode("overwrite").parquet(p))
@@ -512,12 +512,14 @@ object Similarity {
     // version rides in the spec: the canonicalized plan prints
     // rhp_buckets(...) identically across derivation changes, so without
     // it a formula change would serve stale cells.
-    val spec = graft.sources.Staging.planSpec(
-      ivfIndexFrame(emb, nPlanes, dim, seed)) +
+    val index = ivfIndexFrame(emb, nPlanes, dim, seed)
+    val spec = graft.sources.Staging.planSpec(index) +
       "|" + graft.functions.RhpBuckets.FormulaVersion +
       "\n" + graft.sources.Staging.sourceStamp(Seq(source))
+    // the cell column is left to the directory names, which type it by
+    // the values written, as the probe-side cast below expects
     val corpus = graft.sources.ManifestStore.serve(
-      spark, new java.io.File(path), spec,
+      spark, new java.io.File(path), spec, index.drop("bucket").schema,
       graft.sources.ManifestStore.IndexReaderGraceMs)(
       snapPath => buildIvfIndex(emb, snapPath, nPlanes, dim, seed))
     val probes = emb.filter(col("vec_id") < nQueries)

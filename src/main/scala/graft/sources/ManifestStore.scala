@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Pointer-swap snapshot staging — the transactional-table posture
   * ARTIFACTS.md rules 5–6 name as the 100 TB replacement for in-place
@@ -182,9 +183,13 @@ object ManifestStore {
 
   /** Serve the store under `spec` as a parquet read of the resolved
     * snapshot — see [[ensureSnapshot]] for the pointer semantics.
+    * `schema` is what `write` publishes, read back: without it every serve
+    * runs a job to infer the schema from the snapshot's footers. A
+    * partition column it leaves out is still typed from the directory
+    * names, as inference types it.
     */
-  def serve(spark: SparkSession, root: File, spec: String,
+  def serve(spark: SparkSession, root: File, spec: String, schema: StructType,
       graceMs: Long = 0L)(write: String => Unit): DataFrame =
-    spark.read.parquet(
+    spark.read.schema(schema).parquet(
       ensureSnapshot(root, spec, graceMs)(write).getAbsolutePath)
 }

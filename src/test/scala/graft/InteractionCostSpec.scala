@@ -1,11 +1,7 @@
 package graft
 
 import java.time.{Instant, LocalDateTime, ZoneOffset}
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
@@ -38,35 +34,6 @@ class InteractionCostSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
   }
 
   private def interaction(p: EventParams): Seq[Array[Row]] = charts(p).map(_._2.collect())
-
-  private def compiles(body: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
-
-  /** Jobs started while `body` runs. A marker job after it flushes the
-    * listener bus, which delivers events in order.
-    */
-  private def jobs(body: => Unit): Int = {
-    val marker = "interactioncostspec-marker"
-    val descriptions = new ConcurrentHashMap[Int, String]()
-    val markerDone = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = descriptions.put(e.jobId,
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (descriptions.get(e.jobId) == marker) markerDone.countDown()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      assert(markerDone.await(60, TimeUnit.SECONDS), "listener bus stalled")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    descriptions.values.asScala.count(_ != marker)
-  }
 
   private val stateA = EventParams("2024-01-05 00:00:00", "2024-01-20 00:00:00", 6, 18,
     Seq("view", "click", "purchase"))

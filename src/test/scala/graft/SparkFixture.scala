@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM — the SAME conf
@@ -12,4 +17,34 @@ object TestSpark {
 trait SparkFixture {
   lazy val spark: SparkSession = TestSpark.spark
   val sf001 = "/root/testdata/sf0.001"
+
+  /** Classes whole-stage and expression codegen compiled while `body` ran. */
+  def compiles(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Jobs started while `body` runs. A marker job after it flushes the
+    * listener bus, which delivers events in order.
+    */
+  def jobs(body: => Unit): Int = {
+    val marker = "sparkfixture-jobs-marker"
+    val descriptions = new ConcurrentHashMap[Int, String]()
+    val markerDone = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = descriptions.put(e.jobId,
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (descriptions.get(e.jobId) == marker) markerDone.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(markerDone.await(60, TimeUnit.SECONDS), "listener bus stalled")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    descriptions.values.asScala.count(_ != marker)
+  }
 }
