@@ -682,12 +682,17 @@ object Bench {
     // attributed the delta to code — the same provenance failure class
     // the host-speed canary closes for hardware. Every knob is recorded
     // (empty string = unset), and benchdiff prints a TUNING DIFFERS
-    // banner + suppresses wall-time comparison when they mismatch.
-    val tuningJson = Seq("SPARK_GRAFT_CONF", "SPARK_GRAFT_GATE_PARTITIONS",
+    // banner + suppresses wall-time comparison when they mismatch. The
+    // local filesystem's class and whether libhadoop loaded are stamped
+    // beside them: without either fix, every local write forks `chmod`.
+    val localFs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val tuningJson = (Seq("SPARK_GRAFT_CONF", "SPARK_GRAFT_GATE_PARTITIONS",
       "SPARK_GRAFT_JOIN_GATE_PARTITIONS", "SPARK_GRAFT_MAX_PAIR_BUDGET",
-      "SPARK_GRAFT_CPUS")
-      .map(k => "\"" + k + "\":\"" +
-        GraftSession.jsonEscape(sys.env.getOrElse(k, "")) + "\"")
+      "SPARK_GRAFT_CPUS").map(k => k -> sys.env.getOrElse(k, "")) ++ Seq(
+      "fs_file_impl" -> localFs.getClass.getName,
+      "native_io" -> org.apache.hadoop.io.nativeio.NativeIO.isAvailable.toString))
+      .map { case (k, v) => "\"" + k + "\":\"" + GraftSession.jsonEscape(v) + "\"" }
       .mkString("{", ",", "}")
     val envJson =
       s"""{"take_id":"$takeId",""" +

@@ -60,6 +60,25 @@ object GraftSession {
       // slice, so each warm pass recompiled ~193 classes. A cached class
       // stays loaded: the full take ends with 15 MB more Metaspace.
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      // The cache key is the generated source, and a whole-stage class is
+      // named after its codegen stage id, which AQE assigns in stage
+      // creation order: a rerun whose stages completed in another order
+      // compiled the same code again (td17: 4 classes). Unnumbered names
+      // make equal code one key; the id still shows in plans and metrics.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // Without the native libhadoop, Hadoop's local filesystem forks a
+      // `chmod` for every file, `.crc` twin and directory it creates, and
+      // FileContext (stream checkpoints) a `readlink` per rename: a warm
+      // Pipeline.run forked ~400 processes. These set the same mode bits
+      // with NIO and still write and verify `.crc` files.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
+      // List a partitioned store's files on the driver, however many
+      // partitions it has. The session is always local[N], so a listing
+      // job (over 32 paths by default: one task per date of a 60-date
+      // clean store) only adds scheduling to an in-process directory walk.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
     // SPARK_GRAFT_CONF: semicolon-separated k=v pairs applied last — the
     // measurement-time tuning surface (e.g. state-store provider or
     // changelog-checkpointing experiments inside a bench take, r16

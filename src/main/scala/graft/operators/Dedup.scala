@@ -681,10 +681,15 @@ object Dedup {
     * which halves the remaining label-chain depth every round ⇒ O(log
     * diameter) rounds total. Shallow corpora — the normal case — converge
     * before the escalation and never pay for the extra join.
+    *
+    * `broadcastLabels` pins the label table as each round's broadcast
+    * build side, for callers whose graph is known to be tiny. Left to
+    * AQE, the side depends on whether the label cache has materialized
+    * (its statistics read unknown until then), which varies between runs.
     */
   def dupClusters(
       pairs: DataFrame, maxIter: Int = 20, escalateAfter: Int = 6,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None, broadcastLabels: Boolean = false): DataFrame = {
     // Lineage truncation strategy, caller-selectable: localCheckpoint is
     // right for single-JVM runs (no filesystem round-trip) but dies with
     // an executor; a production cluster passes `checkpointDir` and gets
@@ -753,7 +758,8 @@ object Dedup {
     // one extra no-change round, hence <= (a diameter-maxIter chain
     // finishes changing on round maxIter and confirms on maxIter + 1)
     while (!converged && it <= maxIter) {
-      val nbrMin = edgesF.join(labels, col("src") === col("id"))
+      val nbrMin = edgesF.join(if (broadcastLabels) broadcast(labels) else labels,
+          col("src") === col("id"))
         .select(col("dst").as("id"), col("lbl"))
       // pointer doubling once the one-hop phase has overstayed its welcome:
       // adopt the label OF my label too (labels ⋈ labels on lbl = id)

@@ -249,7 +249,8 @@ object Graphs {
       .select(least(col("src"), col("dst")).cast("long").as("doc_a"),
         greatest(col("src"), col("dst")).cast("long").as("doc_b"))
       .distinct()
-    val comp = Dedup.dupClusters(pairs)
+    // ≤ 25 nodes: broadcast the labels, so the round plan does not flip
+    val comp = Dedup.dupClusters(pairs, broadcastLabels = true)
     val sizes = comp.groupBy(col("rep_id")).agg(count(lit(1)).as("bloc_size"))
     val names = nation.select(col("n_nationkey"), col("n_name"))
     comp.join(sizes, Seq("rep_id"))

@@ -77,13 +77,16 @@ object Tables {
   private val readerCache = new java.util.concurrent.ConcurrentHashMap[SparkSession,
     scala.collection.concurrent.TrieMap[String, DataFrame]]()
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  private def cached(spark: SparkSession, key: String)(read: => DataFrame): DataFrame =
     readerCache
       .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-      .getOrElseUpdate(s"$sfDir/$name", name match {
-        case "events" => normalizeTs(eventsRaw(spark, sfDir))
-        case n        => spark.read.parquet(path(sfDir, n))
-      })
+      .getOrElseUpdate(key, read)
+
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    cached(spark, s"$sfDir/$name")(name match {
+      case "events" => normalizeTs(eventsRaw(spark, sfDir))
+      case n        => spark.read.parquet(path(sfDir, n))
+    })
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "orders")
@@ -148,29 +151,27 @@ object Tables {
     * sketch partials dominate; q48 sort-bound) and stay on the raw scan.
     */
   def lineitemMulti(spark: SparkSession, sfDir: String): DataFrame =
-    readerCache
-      .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-      .getOrElseUpdate(s"$sfDir/lineitem-multi", {
-        val src = new File(path(sfDir, "lineitem"))
-        // directory sources size from the summed data files, not the
-        // ~4 KB directory entry (r19 advisor, medium — File.length on a
-        // directory pinned `files` at the 32 floor and re-wrote a large
-        // production table into 32 files, CAPPING decode parallelism)
-        val bytes = tableBytes(sfDir, "lineitem")
-        val files = math.min(512L, math.max(32L, bytes / (32L << 20))).toInt
-        // ALREADY multi-file (the production layout): when the source
-        // directory itself carries at least the floor's worth of data
-        // files, its decode already parallelizes — serve it directly,
-        // no restage (r19 advisor: the staged copy existed to split ONE
-        // single-row-group file, not to re-lay a lakehouse table)
-        if (src.isDirectory && Staging.dataFiles(src).length >= 32)
-          lineitem(spark, sfDir)
-        else {
-          val staged = Staging.stageMultiFile(
-            spark, sfDir, "lineitem", files, "factstage")
-          spark.read.parquet(path(staged, "lineitem"))
-        }
-      })
+    cached(spark, s"$sfDir/lineitem-multi") {
+      val src = new File(path(sfDir, "lineitem"))
+      // directory sources size from the summed data files, not the
+      // ~4 KB directory entry (r19 advisor, medium — File.length on a
+      // directory pinned `files` at the 32 floor and re-wrote a large
+      // production table into 32 files, CAPPING decode parallelism)
+      val bytes = tableBytes(sfDir, "lineitem")
+      val files = math.min(512L, math.max(32L, bytes / (32L << 20))).toInt
+      // ALREADY multi-file (the production layout): when the source
+      // directory itself carries at least the floor's worth of data
+      // files, its decode already parallelizes — serve it directly,
+      // no restage (r19 advisor: the staged copy existed to split ONE
+      // single-row-group file, not to re-lay a lakehouse table)
+      if (src.isDirectory && Staging.dataFiles(src).length >= 32)
+        lineitem(spark, sfDir)
+      else {
+        val staged = Staging.stageMultiFile(
+          spark, sfDir, "lineitem", files, "factstage")
+        spark.read.parquet(path(staged, "lineitem"))
+      }
+    }
 
   /** Rebalance width target: one partition per this many COMPRESSED
     * source bytes (the shingle/vector pipelines do ~20–50× the parquet
@@ -214,11 +215,12 @@ object Tables {
         "spark.sql.legacy.parquet.nanosAsLong=true when building the SparkSession")
 
   /** Raw events scan (ts still a nanos long when the file carries
-    * TIMESTAMP(NANOS)); the streaming source reuses this schema.
+    * TIMESTAMP(NANOS)); the streaming source reuses this schema. Cached
+    * like every reader, so a stream run infers no schema (a parquet job).
     */
   private[graft] def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
     requireNanosConf(spark)
-    spark.read.parquet(path(sfDir, "events"))
+    cached(spark, s"$sfDir/events-raw")(spark.read.parquet(path(sfDir, "events")))
   }
 
   /** Normalize `ts` to a session-zone microsecond TIMESTAMP, whatever

@@ -28,15 +28,23 @@ trait SparkFixture {
   /** Jobs started while `body` runs. A marker job after it flushes the
     * listener bus, which delivers events in order.
     */
-  def jobs(body: => Unit): Int = {
+  def jobs(body: => Unit): Int = jobsSeen(body).size
+
+  /** The (description, call site) of each job started while `body` runs;
+    * the call site is the job's result-stage name, e.g.
+    * `parquet at Tables.scala:224`.
+    */
+  def jobsSeen(body: => Unit): Seq[(String, String)] = {
     val marker = "sparkfixture-jobs-marker"
-    val descriptions = new ConcurrentHashMap[Int, String]()
+    val seen = new ConcurrentHashMap[Int, (String, String)]()
     val markerDone = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = descriptions.put(e.jobId,
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(e.jobId, (
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""),
+        e.stageInfos.maxBy(_.stageId).name))
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (descriptions.get(e.jobId) == marker) markerDone.countDown()
+        if (Option(seen.get(e.jobId)).exists(_._1 == marker)) markerDone.countDown()
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -45,6 +53,6 @@ trait SparkFixture {
       try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
       assert(markerDone.await(60, TimeUnit.SECONDS), "listener bus stalled")
     } finally spark.sparkContext.removeSparkListener(listener)
-    descriptions.values.asScala.count(_ != marker)
+    seen.asScala.toSeq.sortBy(_._1).map(_._2).filter(_._1 != marker)
   }
 }

@@ -30,6 +30,15 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(out.columns.toSeq === Seq("window", "n"))
   }
 
+  test("a second st9 run infers no events schema (no parquet job at Tables.scala)") {
+    def run(): Unit = SparkEntry.benchQueries("st9_mv_maintenance")(spark, sf001)
+      .queryExecution.toRdd.count()
+    run()
+    val seen = jobsSeen(run())
+    assert(seen.nonEmpty)
+    assert(!seen.exists(_._2.startsWith("parquet at Tables.scala")), seen)
+  }
+
   test("st14: sketch state merges across batches, replays are no-ops, guarantees hold") {
     val dir = new java.io.File(sys.props("java.io.tmpdir"), "graft_st14_spec")
     graft.sources.Staging.deleteRecursively(dir)

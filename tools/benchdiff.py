@@ -117,7 +117,10 @@ elif (oc or nc) and not shared_canaries:
 
 # Tuning-provenance guard (r17 advisor, medium): records since r18 stamp
 # the engine-behavior env knobs (SPARK_GRAFT_CONF, gate-partition /
-# state-provider / cpu overrides) into env.tuning. Two records taken
+# state-provider / cpu overrides) into env.tuning, and later records also
+# the local filesystem's class (fs_file_impl) and whether libhadoop
+# loaded (native_io): a local write forks `chmod` unless one of them
+# avoids it. Every key is compared the same way. Two records taken
 # under different tuning are measuring different engines — wall-time
 # comparison is refused (TIME suppressed) with a DIFFERS banner; the
 # plan gate stays armed (a tuning-induced plan change is still a plan

@@ -148,6 +148,21 @@ code, out = run_benchdiff(rt_old, rec({"q1": (2.0, "aaa"), "q2": (2.0, "bbb")},
                                               "SPARK_GRAFT_MAX_PAIR_BUDGET": ""}))
 check("a knob added or dropped while unset is not a tuning difference",
       code == 0 and "TIME  q1" in out and "TUNING DIFFERS" not in out, out)
+# the local-filesystem stamps are tuning keys like the env knobs
+TF = dict(T0, fs_file_impl="graft.sources.NioLocalFileSystem", native_io="false")
+code, out = run_benchdiff(rec({"q1": (1.0, "aaa")}, tuning=TF),
+                          rec({"q1": (2.0, "aaa")}, tuning=dict(
+                              TF, fs_file_impl="org.apache.hadoop.fs.LocalFileSystem")))
+check("a different local filesystem class is a tuning difference",
+      "TUNING DIFFERS" in out and "fs_file_impl" in out and "TIME  " not in out, out)
+code, out = run_benchdiff(rec({"q1": (1.0, "aaa")}, tuning=TF),
+                          rec({"q1": (2.0, "aaa")}, tuning=dict(TF, native_io="true")))
+check("native_io flipping is a tuning difference",
+      "TUNING DIFFERS" in out and "native_io" in out and "TIME  " not in out, out)
+code, out = run_benchdiff(rec({"q1": (1.0, "aaa")}, tuning=TF),
+                          rec({"q1": (2.0, "aaa")}, tuning=dict(TF)))
+check("identical local filesystem stamps keep TIME lines",
+      code == 0 and "TIME  q1" in out and "TUNING DIFFERS" not in out, out)
 code, out = run_benchdiff(rt_old, rec({"q1": (2.0, "aaa"), "q2": (2.0, "bbb")}))
 check("one-sided tuning prints unguarded note, keeps TIME",
       "unguarded by the tuning-provenance check" in out and "TIME  q1" in out, out)
