@@ -43,7 +43,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * exchange) diffs loudly between rounds even when timings are noisy.
   * `tools/benchdiff.py` compares two records.
   *
-  * FINGERPRINT SCHEME 8 (fp_scheme in the record; 8 scrubs ManifestStore
+  * FINGERPRINT SCHEME 9 (fp_scheme in the record; 9 scrubs the checkout
+  * directory (`user.dir`) from paths: plans that scan a store under the
+  * checkout's `target/` print its absolute path, so two checkouts of one
+  * commit disagreed; 8 scrubs ManifestStore
   * snapshot counters — `snap=<n>` — from artifact paths: the counter is
   * run-history state (a fresh checkout builds snap=1 where an
   * incremented store reads snap=2), so any store republish flipped
@@ -187,8 +190,15 @@ object Bench {
   /** Canonical plan text with run-local noise scrubbed — same plan shape
     * must hash identically across runs, JVMs, and machines.
     */
-  def scrubbedPlanText(p: SparkPlan): String = {
-    val raw = finalPlan(p).canonicalized.toString
+  def scrubbedPlanText(p: SparkPlan): String = scrubPlanText(finalPlan(p).canonicalized.toString)
+
+  /** [[scrubbedPlanText]] over a plan's text; `root` (the checkout
+    * directory) prints as `<root>`.
+    */
+  private[graft] def scrubPlanText(
+      planText: String, root: String = sys.props("user.dir")): String = {
+    val raw = planText
+      .replaceAll(java.util.regex.Pattern.quote(root) + "(?=[/\\]\\s,]|$)", "<root>")
       // Canonicalization normalizes exprIds only in the top-level tree;
       // nested AdaptiveSparkPlanExec and DPP subquery nodes stringify
       // with their ORIGINAL per-JVM exprIds (q46/sim4 in r8). Plan shape
@@ -282,12 +292,12 @@ object Bench {
       .replaceAll("\\*\\(\\d+\\)", "*(<n>)")
   }
 
-  def fingerprint(p: SparkPlan): String = {
-    val canon = scrubbedPlanText(p)
+  def fingerprint(p: SparkPlan): String = textFingerprint(scrubbedPlanText(p))
+
+  private[graft] def textFingerprint(canon: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString.take(12)
-  }
 
   /** HOST-SPEED CANARY (fixed-size, in-memory): the load gate measures
     * CONTENTION, not absolute host speed — r16's record passed the gate
@@ -717,7 +727,7 @@ object Bench {
     // capturer's tail window (round 7's official record lost every
     // per-query number that way); this file is the committable history.
     val recJson =
-      s"""{"sf":"$sfDir","runs":$runs,"fp_scheme":8,"env":$envJson,""" +
+      s"""{"sf":"$sfDir","runs":$runs,"fp_scheme":9,"env":$envJson,""" +
         s""""n_failed":${results.size - ok.size},""" +
         s""""total_warm":$warmTotal,"total_cold":$coldTotal,""" +
         s""""contended_mid_run":${

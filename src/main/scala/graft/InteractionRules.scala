@@ -101,13 +101,26 @@ object BindFilterConstants extends Rule[SparkPlan] {
   }
 }
 
+/** The size at or under which AQE would coalesce a stage's output into
+  * one partition anyway: `coalescePartitions.minPartitionSize` under
+  * `parallelismFirst`, else `advisoryPartitionSizeInBytes`. None when
+  * AQE's partition coalescing is off. [[SortSmallStageLocally]] and
+  * [[graft.operators.CleanStore.onePartitionIfSmall]] both read it, so
+  * the two cannot drift.
+  */
+object SmallStage {
+  def onePartitionLimit(conf: SQLConf): Option[Long] =
+    if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED)) None
+    else if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+      Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+    else Some(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+}
+
 /** AQE runtime optimizer rule: a global `Sort` whose input (through
-  * Project/Filter only) is a materialized query stage no larger than what
-  * AQE would coalesce into one partition anyway sorts that one partition
-  * locally. The range exchange it replaces costs a sampling job and a
-  * shuffle job for a result of a few hundred rows. The limit is
-  * `coalescePartitions.minPartitionSize` under `parallelismFirst`, else
-  * `advisoryPartitionSizeInBytes`. Left alone: a sort under a limit (it
+  * Project/Filter only) is a materialized query stage no larger than
+  * [[SmallStage.onePartitionLimit]] sorts that one partition locally. The
+  * range exchange it replaces costs a sampling job and a shuffle job for
+  * a result of a few hundred rows. Left alone: a sort under a limit (it
   * plans as a top-k, with no range exchange) and a sort over a stage that
   * already is its range exchange (that job has run).
   */
@@ -120,24 +133,19 @@ object SortSmallStageLocally extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def onePartitionLimit: Long =
-    if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
-      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
-    else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED)) plan else rewrite(plan, limited = false)
+    SmallStage.onePartitionLimit(conf).fold(plan)(rewrite(plan, _, limited = false))
 
   /** `limited`: the node is the input of a limit (through Project/Offset),
     * so a sort here plans as a top-k with no range exchange to drop.
     */
-  private def rewrite(p: LogicalPlan, limited: Boolean): LogicalPlan = p match {
+  private def rewrite(p: LogicalPlan, limit: Long, limited: Boolean): LogicalPlan = p match {
     case s @ Sort(order, true, child, _) if !limited && stageBelow(child).exists(st =>
-        st.isMaterialized && st.stats.sizeInBytes <= onePartitionLimit &&
+        st.isMaterialized && st.stats.sizeInBytes <= limit &&
           !st.physicalPlan.outputPartitioning.satisfies(OrderedDistribution(order))) =>
       s.copy(global = false, child = Repartition(1, shuffle = false, child))
-    case _: LocalLimit => p.withNewChildren(p.children.map(rewrite(_, limited = true)))
-    case _: Project | _: Offset => p.withNewChildren(p.children.map(rewrite(_, limited)))
-    case _ => p.withNewChildren(p.children.map(rewrite(_, limited = false)))
+    case _: LocalLimit => p.withNewChildren(p.children.map(rewrite(_, limit, limited = true)))
+    case _: Project | _: Offset => p.withNewChildren(p.children.map(rewrite(_, limit, limited)))
+    case _ => p.withNewChildren(p.children.map(rewrite(_, limit, limited = false)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructField, StructType}
 import graft.sources.Tables
@@ -214,8 +215,25 @@ object CleanStore {
         java.nio.file.Files.write(srcStampFile.toPath, srcStamp.getBytes)
         if (!marker.exists()) { java.nio.file.Files.createFile(marker.toPath); () }
       }
-      spark.read.schema(servedSchema(built.schema, partCol)).parquet(dir)
+      onePartitionIfSmall(spark.read.schema(servedSchema(built.schema, partCol)).parquet(dir))
     }
+  }
+
+  /** A served file store read as ONE partition when its files total no
+    * more than [[graft.SmallStage.onePartitionLimit]]: AQE would coalesce
+    * any stage that small into one partition anyway, and over a
+    * one-partition child an aggregate or a sort needs no exchange, so
+    * each chart above it runs as one single-task job. The size is the
+    * relation's `sizeInBytes`, which the read's own listing provides (no
+    * I/O). Filters push through the `coalesce`, so partition pruning and
+    * pushed filters are unchanged. Any frame that is not a bare file read
+    * is returned as it is.
+    */
+  def onePartitionIfSmall(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case LogicalRelationWithTable(fs: HadoopFsRelation, _) if graft.SmallStage
+        .onePartitionLimit(df.sparkSession.sessionState.conf).exists(fs.sizeInBytes <= _) =>
+      df.coalesce(1)
+    case _ => df
   }
 
   /** The clean events table, materialized once per scale dir. */

@@ -1361,6 +1361,26 @@ object Dedup {
   }
 
   // ------------------------------------------------------------- dd12
+
+  /** `docs`' ids beside their token array `toks`, projected once. A lambda
+    * body is outside subexpression elimination, so a `tokens(...)` inside
+    * the span `transform` would re-split the whole document per span
+    * start.
+    */
+  private def withTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+
+  /** The md5 hash of every k-token span of `toks`, in start order; empty
+    * for a document shorter than k tokens.
+    */
+  private def spanHashes(k: Int): Column = {
+    val toks = col("toks")
+    when(size(toks) >= k,
+      transform(sequence(lit(1), size(toks) - (k - 1)),
+        i => md5(array_join(slice(toks, i, lit(k)), " "))))
+      .otherwise(array().cast("array<string>"))
+  }
+
   /** EXACT-SUBSTRING duplication (the suffix-array dedup family from the
     * published training-data dedup literature, approximated by hashing):
     * every k-token rolling span is hashed; a span hash occurring in ≥ 2
@@ -1376,14 +1396,9 @@ object Dedup {
     * whole operator is oracle-hashable.
     */
   def substringDups(docs: DataFrame, k: Int = 16): DataFrame = {
-    val toks = tokens(col("text"))
-    val spans = when(size(toks) >= k,
-      transform(sequence(lit(1), size(toks) - (k - 1)),
-        i => md5(array_join(slice(toks, i, lit(k)), " "))))
-      .otherwise(array().cast("array<string>"))
     // explode_outer keeps zero-span (short) docs with a null hash so the
     // rollup still emits their row
-    val ex = docs.select(col("doc_id"), explode_outer(spans).as("h"))
+    val ex = withTokens(docs).select(col("doc_id"), explode_outer(spanHashes(k)).as("h"))
     val dup = ex.filter(col("h").isNotNull)
       .select(col("h"), col("doc_id")).distinct()
       .groupBy(col("h")).agg(count(lit(1)).as("nd"))
@@ -1416,12 +1431,7 @@ object Dedup {
     * hash-matches the DuckDB twin byte-for-byte.
     */
   def scrubDupSpans(docs: DataFrame, k: Int = 16): DataFrame = {
-    val toks = tokens(col("text"))
-    val spans = when(size(toks) >= k,
-      transform(sequence(lit(1), size(toks) - (k - 1)),
-        i => md5(array_join(slice(toks, i, lit(k)), " "))))
-      .otherwise(array().cast("array<string>"))
-    val ex = docs.select(col("doc_id"), posexplode(spans).as(Seq("pos", "h")))
+    val ex = withTokens(docs).select(col("doc_id"), posexplode(spanHashes(k)).as(Seq("pos", "h")))
       .select(col("doc_id"), (col("pos") + 1).as("start"), col("h"))
     val dup = ex.select(col("h"), col("doc_id")).distinct()
       .groupBy(col("h")).agg(count(lit(1)).as("nd"))

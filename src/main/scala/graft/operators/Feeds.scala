@@ -53,10 +53,13 @@ object Feeds {
     * computed ONCE: its parquet lands first, the JSON twin re-reads that
     * (tiny) file, with the schema it was written with, instead of
     * re-running the scan-and-aggregate pipeline.
+    * A small clean table is read as one partition
+    * ([[CleanStore.onePartitionIfSmall]]), so its feeds run no exchange.
     * Returns after every feed has finished; the first failure is rethrown.
     */
   def writeAll(spark: SparkSession, sfDir: String, outDir: String, served: Served): Unit = {
-    val fs = feeds(served, spark, sfDir)
+    val fs = feeds(Served(CleanStore.onePartitionIfSmall(served.lineitem),
+      CleanStore.onePartitionIfSmall(served.events)), spark, sfDir)
     require(fs.keySet == feedNames.toSet, "feed inventory out of sync")
     graft.Concurrently.fork(fs.toSeq.map { case (name, df) =>
       () => {

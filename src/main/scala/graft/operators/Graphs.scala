@@ -169,6 +169,9 @@ object Graphs {
     * list shuffles on its join key like any fact join, and the a < b < c
     * orientation is precisely what keeps a celebrity node from squaring
     * its degree in wedges.
+    *
+    * One lazy query: building it runs no job, and the four reads of the
+    * undirected edge set share one `distinct` through exchange reuse.
     */
   def triangles(edges0: DataFrame): DataFrame = {
     val undirected = edges0
@@ -176,7 +179,6 @@ object Graphs {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tri = undirected.as("e1")
       .join(undirected.as("e2"), col("e1.b") === col("e2.a"))
       .join(undirected.as("e3"),
@@ -188,16 +190,13 @@ object Graphs {
     val deg = undirected.select(col("a").as("v"))
       .union(undirected.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("degree"))
-    val out = deg.join(perNode, Seq("v"), "left")
+    deg.join(perNode, Seq("v"), "left")
       .select(col("v"), col("degree"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
       .withColumn("lcc",
         graft.functions.r6(when(col("degree") > 1,
           lit(2.0) * col("triangles") / (col("degree") * (col("degree") - 1)).cast("double"))
           .otherwise(0.0)))
-      .localCheckpoint(true)
-    undirected.unpersist()
-    out
   }
 
   def q40Triangles(spark: SparkSession, sfDir: String): DataFrame =

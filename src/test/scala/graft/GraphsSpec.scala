@@ -51,6 +51,12 @@ class GraphsSpec extends AnyFunSuite with SparkFixture {
     assert(got.values.map(_._2).sum === 12L)
   }
 
+  test("q40's registry build runs no job") {
+    val q40 = SparkEntry.benchQueries("q40_triangles")
+    q40(spark, sf001).collect()
+    assert(jobs(q40(spark, sf001)) === 0)
+  }
+
   test("edgesArtifact builds once, serves the same edges, and is reused when fresh") {
     val a = Graphs.edgesArtifact(spark, sf001)
     val root = new java.io.File(

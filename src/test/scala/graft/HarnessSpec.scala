@@ -19,6 +19,18 @@ class HarnessSpec extends AnyFunSuite with SparkFixture {
       escaped.contains("\\u0001"))
   }
 
+  test("plan_fp: one plan text under two checkout directories gives one fingerprint") {
+    def text(root: String) =
+      s"FileScan parquet [ts#x] Location: InMemoryFileIndex(1 paths)[file:$root/target/clean/" +
+        s"sf0.01/events], PartitionFilters: [], ReadSchema: struct<ts:timestamp>"
+    val a = Bench.scrubPlanText(text("/srv/a/repo"), "/srv/a/repo")
+    val b = Bench.scrubPlanText(text("/home/b/checkout"), "/home/b/checkout")
+    assert(a === b && a.contains("file:<root>/target/clean/sf0.01/events"), a)
+    assert(Bench.textFingerprint(a) === Bench.textFingerprint(b))
+    // a sibling directory that merely starts with the root stays as it is
+    assert(Bench.scrubPlanText(text("/srv/a/repo2"), "/srv/a/repo").contains("/srv/a/repo2"))
+  }
+
   test("Tables reader cache: same session + table -> same DataFrame plan") {
     val a = Tables.lineitem(spark, sf001)
     val b = Tables.lineitem(spark, sf001)

@@ -79,10 +79,10 @@ class InteractionCostSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
     case other => other.toString
   }
 
-  test("each small sorted chart runs 2 jobs and no range exchange") {
+  test("each small sorted chart runs 1 job and no range exchange") {
     interaction(stateA)
     for ((name, df) <- charts(stateB) if sortedCharts.contains(name)) {
-      assert(jobs(df.collect()) === 2, name)
+      assert(jobs(df.collect()) === 1, name)
       val plan = finalPlan(df)
       assert(!plan.toLowerCase.contains("rangepartitioning"), s"$name:\n$plan")
       assert(plan.contains("Coalesce 1"), s"$name:\n$plan")

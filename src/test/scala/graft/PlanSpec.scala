@@ -352,6 +352,18 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(aggs >= 2, s"expected partial+final HashAggregate, got $aggs:\n$p")
   }
 
+  test("dd12/dd17: each document is tokenized once, not once per span start") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    for (name <- Seq("dd12_substring_dups", "dd17_scrub_dup_spans")) {
+      val optimized = SparkEntry.benchQueries(name)(spark, sf001).queryExecution.optimizedPlan
+      val splitInLambda = optimized.exists(_.expressions.exists(_.exists {
+        case l: LambdaFunction => l.function.exists(_.isInstanceOf[StringSplit])
+        case _ => false
+      }))
+      assert(!splitInLambda, s"$name splits its text inside a lambda:\n$optimized")
+    }
+  }
+
   test("dd10: the eval shingle side broadcasts — the training corpus never shuffles for candidates") {
     val p = plan(Dedup.decontaminate(Tables.documents(spark, sf001)))
     assert(p.contains("BroadcastHashJoin"), s"eval join is not broadcast:\n$p")

@@ -30,7 +30,11 @@ either end-load far above processor count), a LOUD banner flags that
 timing deltas are environment, not code — r8's driver record looked like
 a uniform 1.5x regression and cost a judging session to refute.
 
-Fingerprint schemes: `fp_scheme` 4 scrubs the JVM-global
+Fingerprint schemes: `fp_scheme` 9 scrubs the checkout directory from
+plan paths, so two checkouts of one commit share fingerprints (scheme-8
+records taken in different directories differ on every plan that scans
+a store under the checkout's `target/`); 8 scrubs ManifestStore `snap=`
+counters; 5-7 scrub codegen stage ids and FileScan Location noise; 4 scrubs the JVM-global
 common-subexpression/lambda counters (scheme-3 hashes shifted with
 session composition); 3 hashes the truly-finalized adaptive
 plan of the execution that was timed (scheme 2 claimed finality but read

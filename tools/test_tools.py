@@ -18,7 +18,7 @@ def check(name, cond, detail=""):
         FAILS.append(name)
 
 
-def rec(queries, fp_scheme=6, load=0.5, canary=None, tuning=None,
+def rec(queries, fp_scheme=9, load=0.5, canary=None, tuning=None,
         contended=(), mid_run=None, slow=(), slow_list=None):
     env = {"load_avg_start": load, "load_avg_end": load,
            "available_processors": 32}
@@ -92,6 +92,13 @@ check("scheme change exits 2 without flag", code == 2 and "SCHEMES DIFFER" in ou
 code, out = run_benchdiff(r5, r0, extra=["--allow-scheme-change"])
 check("--allow-scheme-change exits 0 and suppresses plan diff",
       code == 0 and not any(l.startswith("PLAN  ") for l in out.splitlines()), out)
+
+# 5b. the scheme-8 -> 9 transition (checkout directory scrubbed) is a
+# scheme change like any other: exit 2 unless acknowledged
+r8 = rec({"q1": (1.0, "aaa"), "q2": (2.0, "bbb")}, fp_scheme=8)
+code, out = run_benchdiff(r8, r0)
+check("scheme 8 -> 9 exits 2 without flag",
+      code == 2 and "old=8, new=9" in out, out)
 
 # 6. environment banner on >2x load difference
 r6 = rec({"q1": (1.0, "aaa"), "q2": (2.0, "bbb")}, load=8.0)
