@@ -9,8 +9,9 @@ import graft.functions.{BpeSymCount, JsonFirstLong, DotProduct, ImageHeader, Mat
 /** Session extensions registering graft's native Catalyst expressions so
   * they are callable from SQL and `expr(...)` — the public
   * `SparkSessionExtensions` route (no sessionState internals) — and the
-  * two plan rules that take a repeated dashboard interaction's fixed cost
-  * away: [[BindFilterConstants]] (query-stage preparation) and
+  * three plan rules that take a repeated dashboard interaction's fixed
+  * cost away: [[BindFilterConstants]] (query-stage preparation),
+  * [[BindCachedScanConstants]] (planner strategy) and
   * [[SortSmallStageLocally]] (AQE runtime optimizer). Enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   */
@@ -38,6 +39,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectQueryStagePrepRule(_ => BindFilterConstants)
+    ext.injectPlannerStrategy(BindCachedScanConstants)
     ext.injectRuntimeOptimizerRule(_ => SortSmallStageLocally)
     ext.injectFunction((
       FunctionIdentifier("simhash60"),

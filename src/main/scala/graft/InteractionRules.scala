@@ -4,13 +4,16 @@ import scala.annotation.tailrec
 import scala.collection.immutable.HashSet
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, In, LeafExpression, Literal, Predicate, UnaryExpression}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Expression, In, LeafExpression, Literal, Or, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalLimit, LogicalPlan, Offset, Project, Repartition, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -27,12 +30,31 @@ case class BoundConstant(lit: Literal) extends LeafExpression {
   override def toString: String = lit.toString
   override def sql: String = lit.sql
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val javaType = CodeGenerator.javaType(dataType)
-    val ref = ctx.addReferenceObj("constant", lit.value, CodeGenerator.boxedType(dataType))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    BoundConstant.genCode(ctx, lit)
+}
+
+object BoundConstant {
+  /** A field read once from the `references` array: the code names the
+    * constant's type, never its value.
+    */
+  def genCode(ctx: CodegenContext, lit: Literal): ExprCode = {
+    val javaType = CodeGenerator.javaType(lit.dataType)
+    val ref = ctx.addReferenceObj("constant", lit.value, CodeGenerator.boxedType(lit.dataType))
     val field = ctx.addMutableState(javaType, "constant", v => s"$v = $ref.${javaType}Value();")
-    ExprCode.forNonNullValue(JavaCode.global(field, dataType))
+    ExprCode.forNonNullValue(JavaCode.global(field, lit.dataType))
   }
+}
+
+/** A [[BoundConstant]] for a cached scan's batch-pruning predicates. The
+  * cache's batch filter recognises a comparison only against a `Literal`,
+  * so this one is a literal, and it prints and compares like the literal
+  * it replaces. Its constructor has the shape of `Literal`'s, so a
+  * reflective copy keeps the class.
+  */
+class BoundScanConstant(v: Any, t: DataType) extends Literal(v, t) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    BoundConstant.genCode(ctx, this)
 }
 
 /** `child IN (list)` over non-null string literals, evaluated as one probe
@@ -64,9 +86,12 @@ case class BoundStringIn(child: Expression, list: Seq[Literal])
   * and turn a string `IN` list into one [[BoundStringIn]]. A dashboard
   * interaction that only moves its widget bounds then compiles nothing
   * new. Literals elsewhere in a condition stay literals: some expressions
-  * read theirs at plan time (a rounding scale, a seed). The scan's pushed
-  * filters and partition filters are separate expressions and stay as
-  * they are.
+  * read theirs at plan time (a rounding scale, a seed). A file scan's
+  * pushed filters and partition filters are separate expressions and stay
+  * as they are.
+  *
+  * A cached scan's predicates are bound where the scan is planned
+  * ([[BindCachedScanConstants]]).
   */
 object BindFilterConstants extends Rule[SparkPlan] {
 
@@ -86,18 +111,61 @@ object BindFilterConstants extends Rule[SparkPlan] {
     case _ => false
   }
 
-  private def bindCondition(condition: Expression): Expression = condition.transformUp {
-    case c: BinaryComparison if c.children.exists(_.isInstanceOf[Literal]) =>
-      c.withNewChildren(c.children.map(bind))
+  private val bindStringIn: PartialFunction[Expression, Expression] = {
     case In(v, list) if list.size > 1 && v.dataType == StringType &&
         list.forall(isStringLiteral) =>
       BoundStringIn(v, list.map(_.asInstanceOf[Literal]))
+  }
+
+  private def bindCondition(condition: Expression): Expression = condition.transformUp {
+    case c: BinaryComparison if c.children.exists(_.isInstanceOf[Literal]) =>
+      c.withNewChildren(c.children.map(bind))
+    case e if bindStringIn.isDefinedAt(e) => bindStringIn(e)
+  }
+
+  /** A cached scan's predicate with its comparison constants bound for
+    * the scan's batch filter: primitive literals become
+    * [[BoundScanConstant]]s and a string `IN` list a [[BoundStringIn]].
+    * Nodes are built with their constructors: a [[BoundScanConstant]]
+    * equals the literal it replaces, and Catalyst's `withNewChildren` and
+    * `transform` keep the old node when the new one is equal to it.
+    */
+  private[graft] def bindScanPredicate(e: Expression): Expression = e match {
+    case And(l, r) => And(bindScanPredicate(l), bindScanPredicate(r))
+    case Or(l, r) => Or(bindScanPredicate(l), bindScanPredicate(r))
+    case c: BinaryComparison if c.children.exists(_.isInstanceOf[Literal]) =>
+      c.makeCopy(Array[AnyRef](c.left, c.right).map {
+        case Literal(v, t) if v != null && bindable(t) => new BoundScanConstant(v, t)
+        case other => other
+      })
+    case other => bindStringIn.applyOrElse(other, identity[Expression])
   }
 
   override def apply(plan: SparkPlan): SparkPlan = plan.transform {
     case f: FilterExec =>
       val bound = bindCondition(f.condition)
       if (bound.fastEquals(f.condition)) f else f.copy(condition = bound)
+  }
+}
+
+/** Planner strategy: a cached scan (`InMemoryTableScanExec`) planned with
+  * its predicates bound ([[BindFilterConstants.bindScanPredicate]]). The
+  * scan compiles its predicates into a batch filter over each cached
+  * batch's column statistics, once per query, so a literal in them made
+  * each new widget state compile a class. Primitive comparison constants
+  * still prune batches. A string `IN` list no longer does: the batch
+  * filter does not recognise a [[BoundStringIn]], and its one disjunct
+  * per element made each list length a new class. The `Filter` above the
+  * scan applies every predicate to every row, as Spark's own cached-scan
+  * planning does. The plan prints as before.
+  */
+case class BindCachedScanConstants(session: SparkSession) extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PhysicalOperation(projectList, filters, mem: InMemoryRelation) if filters.nonEmpty =>
+      session.sessionState.planner.pruneFilterProject(projectList, filters,
+        identity[Seq[Expression]],
+        InMemoryTableScanExec(_, filters.map(BindFilterConstants.bindScanPredicate), mem)) :: Nil
+    case _ => Nil
   }
 }
 

@@ -15,13 +15,25 @@ import org.apache.spark.scheduler._
   * driver path.
   */
 object Profile {
+
+  /** A stage's row label: the operation scopes of its RDDs, in RDD order,
+    * e.g. `Exchange, WholeStageCodegen (2)`. AQE submits every stage from
+    * one helper thread, so a stage's own name (its call site) reads
+    * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:…` for
+    * all of them. A stage with no scoped RDD keeps its name.
+    */
+  def stageLabel(info: StageInfo): String = {
+    val scopes = info.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
+    if (scopes.isEmpty) info.name else scopes.mkString(", ")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "3").toInt
     val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val registry = SparkEntry.benchQueries
     // SPARK_GRAFT_PROFILE_STAGES=1 additionally prints a per-stage table
-    // (task count, summed task time, GC time, callsite) after each run —
+    // (task count, summed task time, GC time, [[stageLabel]]) after each run —
     // the decomposition needed to find WHICH stage burns CPU when the
     // totals say a query anti-scales (r19 verdict item 2: dd11's 32-core
     // task_time was 6x its 8-core value with identical output).
@@ -44,7 +56,7 @@ object Profile {
           stageRows.add((id, s.stageInfo.numTasks,
             Option(stageTime.get(id)).map(_.longValue).getOrElse(0L),
             Option(stageGc.get(id)).map(_.longValue).getOrElse(0L),
-            s.stageInfo.name))
+            stageLabel(s.stageInfo)))
         }
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.sources.Tables
 
 /** The materialized CLEAN serving layer — the reference's
@@ -156,6 +157,9 @@ object CleanStore {
     * double-checked: a concurrent builder's finished marker+spec makes
     * the re-check serve instead of re-writing — two JVMs sharing
     * `target/` can no longer interleave a half-written table.
+    *
+    * A store served as one partition ([[onePartitionIfSmall]]) is also
+    * served from memory ([[inMemory]]).
     */
   private def ensure(
       spark: SparkSession, sfDir: String, name: String, sourceTable: String,
@@ -180,6 +184,8 @@ object CleanStore {
       lazy val spec = graft.sources.Staging.planSpec(built)
       val specFresh = marker.exists() && specFile.exists() && fpFile.exists() &&
         new String(java.nio.file.Files.readAllBytes(specFile.toPath)) == spec
+      val sourceChanged = !srcStampFile.exists() ||
+        new String(java.nio.file.Files.readAllBytes(srcStampFile.toPath)) != srcStamp
       if (!specFresh) graft.sources.Staging.timedRebuild {
         writePartitioned(built, tsCol, partCol, dir)
         // fingerprint the STAGED output (one read of the clean table),
@@ -191,9 +197,7 @@ object CleanStore {
             col(partCol), built.columns.toSeq))
         java.nio.file.Files.write(specFile.toPath, spec.getBytes)
         java.nio.file.Files.write(srcStampFile.toPath, srcStamp.getBytes)
-      } else if (!srcStampFile.exists() ||
-          new String(java.nio.file.Files.readAllBytes(srcStampFile.toPath)) != srcStamp)
-        graft.sources.Staging.timedRebuild {
+      } else if (sourceChanged) graft.sources.Staging.timedRebuild {
         val current = sourceFingerprints(built, tsCol, partCol)
         val recorded = readFingerprints(fpFile)
         val changed = current.keySet.filter(d => !recorded.get(d).contains(current(d)))
@@ -215,8 +219,45 @@ object CleanStore {
         java.nio.file.Files.write(srcStampFile.toPath, srcStamp.getBytes)
         if (!marker.exists()) { java.nio.file.Files.createFile(marker.toPath); () }
       }
-      onePartitionIfSmall(spark.read.schema(servedSchema(built.schema, partCol)).parquet(dir))
+      val files = spark.read.schema(servedSchema(built.schema, partCol)).parquet(dir)
+      val served = onePartitionIfSmall(files)
+      if (served eq files) files
+      else inMemory(dir, (Seq(new String(java.nio.file.Files.readAllBytes(fpFile.toPath)), spec) ++
+        listedFiles(files)).mkString("\n"), rebuilt = !specFresh || sourceChanged, served)
     }
+  }
+
+  /** The content key each store directory's in-memory snapshot was cached
+    * under.
+    */
+  private val snapshotKeys = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** `served` (a one-partition read of the store at `dir`), cached in
+    * memory so the second query over the store reads no file. The cache
+    * fills on the first query over it, and any later read of the same
+    * store with the same plan reads the cache. The snapshot is dropped and
+    * cached again when the store's content key (per-date fingerprints,
+    * build spec and the files the read listed) differs from the one it was
+    * cached under, which covers a rebuild by another process; when this
+    * call rebuilt the store; and when the cache no longer holds it
+    * (`spark.catalog.clearCache()`). Runs under the staging lock, so the
+    * key and the listing are one committed state.
+    */
+  private def inMemory(dir: String, key: String, rebuilt: Boolean,
+      served: DataFrame): DataFrame = {
+    val cached = served.storageLevel != StorageLevel.NONE
+    if (rebuilt || !cached || snapshotKeys.get(dir) != key) {
+      if (cached) served.unpersist(blocking = false)
+      served.persist(StorageLevel.MEMORY_ONLY)
+      snapshotKeys.put(dir, key)
+    }
+    served
+  }
+
+  /** The files a bare file read listed when it was built (no I/O). */
+  private def listedFiles(df: DataFrame): Seq[String] = df.queryExecution.analyzed match {
+    case LogicalRelationWithTable(fs: HadoopFsRelation, _) => fs.location.inputFiles.toSeq.sorted
+    case _ => Nil
   }
 
   /** A served file store read as ONE partition when its files total no

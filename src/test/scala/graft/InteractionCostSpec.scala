@@ -110,7 +110,11 @@ class InteractionCostSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
   }
 
   test("pf3: Filter and PushedFilters print as before binding, and the filter is bound") {
-    val df = Params.pf3ParamFilterClean(spark, sf001)
+    // over the one-partition limit the store is read from files, so the
+    // plan has a file scan with pushed filters to compare
+    val tight = GraftSession.fork(spark,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+    val df = Params.pf3ParamFilterClean(tight, sf001)
     df.collect()
     def filters(p: SparkPlan): Seq[FilterExec] = collect(p) { case f: FilterExec => f }
     def pushed(p: SparkPlan): Seq[String] =
@@ -122,6 +126,8 @@ class InteractionCostSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
     assert(after.map(_.condition.sql) === before.map(_.condition.sql))
     assert(after.exists(_.condition.exists(_.isInstanceOf[BoundConstant])))
     assert(after.exists(_.condition.exists(_.isInstanceOf[BoundStringIn])))
+    assert(pushed(df.queryExecution.sparkPlan).exists(_.contains("ts")),
+      pushed(df.queryExecution.sparkPlan).toString)
     assert(pushed(df.queryExecution.executedPlan) === pushed(df.queryExecution.sparkPlan))
   }
 

@@ -15,6 +15,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
 
+  /** A session whose one-partition limit is 1 byte: a served clean store
+    * is over it, so it is read from files, not from the in-memory
+    * snapshot a small store is served from. The file-scan audits run here.
+    */
+  private lazy val overLimit = GraftSession.fork(spark,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+
   test("q16: filter AND projection reach the parquet scan") {
     val p = plan(Analytics.q16Projection(spark, sf001))
     assert(p.contains("PushedFilters:") &&
@@ -103,7 +110,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("pf3: the F1 date range prunes the clean events table at the scan") {
-    val df = Params.pf3ParamFilterClean(spark, sf001)
+    val df = Params.pf3ParamFilterClean(overLimit, sf001)
     // static pruning is decided at planning — read it off the pre-AQE
     // physical plan (AQE query stages are leaves; collect can't see
     // through them after execution)
@@ -167,7 +174,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val zScan = box(CleanStore.eventsZOrdered(spark, sfA))
     // the date layout gets its BEST case: partition pruning on F1 applied,
     // exactly as pf3 serves it
-    val dScan = box(CleanStore.events(spark, sfA)
+    val dScan = box(CleanStore.events(overLimit, sfA)
         .filter(col("event_date").between(
           to_date(lit(p.tsLo).cast("timestamp")),
           to_date(lit(p.tsHi).cast("timestamp")))))
@@ -186,7 +193,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // one-dimensional date layout must read — strictly fewer rows leave
     // the scan for the same predicate and the same result
     val zRead = scannedRows(box(CleanStore.eventsZOrdered(spark, sfA)))
-    val dRead = scannedRows(box(CleanStore.events(spark, sfA)
+    val dRead = scannedRows(box(CleanStore.events(overLimit, sfA)
       .filter(col("event_date").between(
         to_date(lit(p.tsLo).cast("timestamp")),
         to_date(lit(p.tsHi).cast("timestamp"))))))
